@@ -34,6 +34,13 @@ package graft.ops
   * → 32 (floor; bench protocol unchanged), sf10 (1.80 GB) → 64 —
   * exactly the width the r12 probe proved cures q22/q9 — and the
   * sf100 mixed dir (2.38 GB) → 96.
+  *
+  * Callers: the Bench/Verify/Probe/StreamBench session builders, which
+  * fix the width for the whole session, and the atomic importer
+  * (`pipeline.Import.importGtfsAtomically`), which sizes it from the
+  * staged feed (the zip copy or the feed dir) and scopes it to ONE
+  * import: set after the digest-skip decision, restored to the
+  * caller's value when the import lock is released.
   */
 private[graft] object ShuffleWidth {
   /** Compressed input bytes per shuffle partition (≈128 MiB decoded). */

@@ -94,7 +94,12 @@ object Import {
     stageFeed(source, staged)
     val downloadMs = (System.nanoTime() - t0) / 1000000
 
+    // the caller's shuffle width, restored before the lock is released
+    val widthKey = "spark.sql.shuffle.partitions"
+    val callerWidth = spark.conf.get(widthKey)
     store.acquireLockNowait() // T1 (import.js:128-132)
+    // An aborted import publishes nothing: its fresh dir stays as an
+    // orphan that the next run's retention pass reaps (T3/T6).
     try {
       val tImport = System.nanoTime()
       val recorded = store.listImports(cfg.dbPrefix)
@@ -148,81 +153,81 @@ object Import {
           None, (System.nanoTime() - tImport) / 1000000)
       }
 
+      // Size the shuffle width to the staged feed (core-count floor,
+      // full waves, cap) rather than Spark's default 200; only real
+      // imports pay for the listing, the skip path above does not.
+      spark.conf.set(widthKey, graft.ops.ShuffleWidth.forDir(
+        staged.toString, spark.sparkContext.defaultParallelism).toLong)
+
       // H4/K5: fresh DB (import.js:246-247) on the DDL "connection".
       val importedAt = cfg.now()
       val dbName = Digests.formatDbName(cfg.dbPrefix, importedAt, feedDigest)
       val dbPath = store.createDatabase(dbName)
 
-      try {
-        // S2/S3 → C1-C16 → K1, or the caller's wholesale stage override
-        // (GTFS_IMPORT_SCRIPT analog, import.js:64-65).
-        val feed = cfg.importStage.getOrElse(defaultImportStage _)(
-          spark, cfg, staged, dbPath)
-        // C18: per-import cleaning log artifact — the reference tees
-        // gtfsclean output to `tidied.gtfs.gtfstidy-log.txt`
-        // (import.sh:105-109); ours records the stages applied.
-        writeCleanLog(cfg, feed, dbPath, feedDigest, importedAt)
-        // K1 over JDBC: bulk-load the entities into one schema per
-        // import — the gtfs-to-sql|psql stage (import.sh:124-132), with
-        // the per-import PG database mapped to a per-import schema.
-        cfg.jdbcTarget.foreach(t =>
-          graft.sinks.JdbcSink.loadFeedIntoSchema(feed, t, dbName))
-        // L4: import metadata
-        Views.importMetadata(spark, feedDigest, importedAt, cfg.dbPrefix)
-          .write.mode("overwrite").parquet(dbPath.resolve("import_metadata").toString)
-        // materialized consumer views (gtfs-via-postgres materializes
-        // service_days; arrivals_departures partitioned by service date
-        // gives date-ranged departure boards partition pruning)
-        if (cfg.materializeViews) {
-          Views.serviceDays(feed).write.mode("overwrite")
-            .parquet(dbPath.resolve("service_days").toString)
-          Views.materializeArrivalsDepartures(feed,
-            dbPath.resolve("arrivals_departures").toString, cfg.defaultTz)
-        }
-        // §2.11 postprocessing: inline SQL strings, then the
-        // postprocessing.d directory (import.sh:134-148) — *.sql files
-        // via spark.sql against the registered entity views and non-.sql
-        // executables via ProcessBuilder, in filename order, dotfiles
-        // excluded (they are excluded from the digest too, P6).
-        val hasPpDir = cfg.postprocessingDir.exists(Files.isDirectory(_))
-        if (cfg.postprocessSql.nonEmpty || hasPpDir) {
-          registerViews(spark, dbPath)
-          cfg.postprocessSql.foreach(execSql(spark, _))
-          // executables get the gtfs DIR as argv[1] (reference contract,
-          // import.sh:140-145): the default stage's extraction dir when
-          // it ran; with an importStage override (which need not extract
-          // anything, and whose tmpDir/extracted could be stale from a
-          // previous run) the staged feed is used — extracting it first
-          // when it is a zip FILE, so scripts always receive a directory
-          val gtfsDirForScripts =
-            if (cfg.importStage.isEmpty) cfg.tmpDir.resolve("extracted")
-            else if (Files.isDirectory(staged)) staged
-            else {
-              val dir = cfg.tmpDir.resolve("extracted")
-              extractFeed(staged, dir)
-              dir
-            }
-          runPostprocessingDir(spark, cfg.postprocessingDir,
-            gtfsDirForScripts, dbPath)
-        }
-
-        // K2 + K4 + T5: stage the commit record, write the DSN file,
-        // publish atomically (import.js:279-311).
-        val rec = SuccessfulImport(dbName, importedAt, feedDigest)
-        cfg.dsnFilePath.foreach(p => store.writeDsnFile(p, dbName))
-        store.transact { _ =>
-          val next = live.filterNot(r => deleted.contains(r.dbName)).toVector :+ rec
-          (next, ())
-        }
-        Result(downloadMs, deleted, retained :+ dbName, importSkipped = false,
-          Some(rec), (System.nanoTime() - tImport) / 1000000)
-      } catch {
-        case NonFatal(e) =>
-          // ROLLBACK: nothing was published; the fresh dir stays as an
-          // orphan for the next run's retention pass (T3/T6).
-          throw e
+      // S2/S3 → C1-C16 → K1, or the caller's wholesale stage override
+      // (GTFS_IMPORT_SCRIPT analog, import.js:64-65).
+      val feed = cfg.importStage.getOrElse(defaultImportStage _)(
+        spark, cfg, staged, dbPath)
+      // C18: per-import cleaning log artifact — the reference tees
+      // gtfsclean output to `tidied.gtfs.gtfstidy-log.txt`
+      // (import.sh:105-109); ours records the stages applied.
+      writeCleanLog(cfg, feed, dbPath, feedDigest, importedAt)
+      // K1 over JDBC: bulk-load the entities into one schema per
+      // import — the gtfs-to-sql|psql stage (import.sh:124-132), with
+      // the per-import PG database mapped to a per-import schema.
+      cfg.jdbcTarget.foreach(t =>
+        graft.sinks.JdbcSink.loadFeedIntoSchema(feed, t, dbName))
+      // L4: import metadata
+      Views.importMetadata(spark, feedDigest, importedAt, cfg.dbPrefix)
+        .write.mode("overwrite").parquet(dbPath.resolve("import_metadata").toString)
+      // materialized consumer views (gtfs-via-postgres materializes
+      // service_days; arrivals_departures partitioned by service date
+      // gives date-ranged departure boards partition pruning)
+      if (cfg.materializeViews) {
+        Views.serviceDays(feed).write.mode("overwrite")
+          .parquet(dbPath.resolve("service_days").toString)
+        Views.materializeArrivalsDepartures(feed,
+          dbPath.resolve("arrivals_departures").toString, cfg.defaultTz)
       }
+      // §2.11 postprocessing: inline SQL strings, then the
+      // postprocessing.d directory (import.sh:134-148) — *.sql files
+      // via spark.sql against the registered entity views and non-.sql
+      // executables via ProcessBuilder, in filename order, dotfiles
+      // excluded (they are excluded from the digest too, P6).
+      val hasPpDir = cfg.postprocessingDir.exists(Files.isDirectory(_))
+      if (cfg.postprocessSql.nonEmpty || hasPpDir) {
+        registerViews(spark, dbPath)
+        cfg.postprocessSql.foreach(execSql(spark, _))
+        // executables get the gtfs DIR as argv[1] (reference contract,
+        // import.sh:140-145): the default stage's extraction dir when
+        // it ran; with an importStage override (which need not extract
+        // anything, and whose tmpDir/extracted could be stale from a
+        // previous run) the staged feed is used — extracting it first
+        // when it is a zip FILE, so scripts always receive a directory
+        val gtfsDirForScripts =
+          if (cfg.importStage.isEmpty) cfg.tmpDir.resolve("extracted")
+          else if (Files.isDirectory(staged)) staged
+          else {
+            val dir = cfg.tmpDir.resolve("extracted")
+            extractFeed(staged, dir)
+            dir
+          }
+        runPostprocessingDir(spark, cfg.postprocessingDir,
+          gtfsDirForScripts, dbPath)
+      }
+
+      // K2 + K4 + T5: stage the commit record, write the DSN file,
+      // publish atomically (import.js:279-311).
+      val rec = SuccessfulImport(dbName, importedAt, feedDigest)
+      cfg.dsnFilePath.foreach(p => store.writeDsnFile(p, dbName))
+      store.transact { _ =>
+        val next = live.filterNot(r => deleted.contains(r.dbName)).toVector :+ rec
+        (next, ())
+      }
+      Result(downloadMs, deleted, retained :+ dbName, importSkipped = false,
+        Some(rec), (System.nanoTime() - tImport) / 1000000)
     } finally {
+      spark.conf.set(widthKey, callerWidth)
       // every entity is materialized (parquet written) or abandoned by
       // here, so blocks pinned by the cleaning stages (e.g. C8's
       // per-service encoding cache) can be released with the lock

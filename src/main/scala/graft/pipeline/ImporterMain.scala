@@ -35,6 +35,10 @@ import org.apache.spark.sql.SparkSession
   *   SPARK_MASTER               ("local[*]") — on a cluster, prefer
   *                              spark-submit, which sets the master
   *
+  * The import sizes its own shuffle width from the feed
+  * ([[graft.ops.ShuffleWidth]]), so `spark.sql.shuffle.partitions`
+  * needs no setting.
+  *
   * Launch (see README "Run the importer" + Dockerfile):
   *   bin/graft-importer        — thin jar + /opt/spark/jars classpath
   *   spark-submit --class graft.pipeline.ImporterMain <thin jar>

@@ -104,6 +104,18 @@ class ShuffleWidthSpec extends AnyFunSuite {
     assert(ShuffleWidth.inputBytes(dir.toString) === 2000L)
   }
 
+  test("the importer's staged feed sizes as the zip copy's length or the sum of its .txt files") {
+    // a zip feed is staged as the extension-less single file `gtfs-feed`
+    val zipCopy = Files.createTempDirectory("swidth-zip").resolve("gtfs-feed")
+    Files.write(zipCopy, Array.fill[Byte](1234)(1))
+    assert(ShuffleWidth.inputBytes(zipCopy.toString) === 1234L)
+    // a feed dir is staged as a directory of GTFS .txt files
+    val feedDir = Files.createTempDirectory("swidth-feed")
+    Files.write(feedDir.resolve("stops.txt"), Array.fill[Byte](300)(2))
+    Files.write(feedDir.resolve("stop_times.txt"), Array.fill[Byte](700)(3))
+    assert(ShuffleWidth.inputBytes(feedDir.toString) === 1000L)
+  }
+
   test("a dir with no recognized data extension still sizes from its total") {
     val dir = Files.createTempDirectory("swidth-raw")
     Files.write(dir.resolve("shard-00000"), Array.fill[Byte](3000)(1))

@@ -140,6 +140,41 @@ class ImportPipelineSpec extends SparkSpec {
     assert(store.listImports("gtfs_").size == 1)
   }
 
+  test("a real import runs at the feed-sized shuffle width and restores the caller's") {
+    val key = "spark.sql.shuffle.partitions"
+    val sessionWidth = spark.conf.get(key)
+    val root = Files.createTempDirectory("store-width")
+    val feed = TestFeed.writeTo(Files.createTempDirectory("fw"))
+    var seen = Seq.empty[String]
+    def recording(fail: Boolean): Import.ImportStage = { (s, c, staged, dbPath) =>
+      seen :+= s.conf.get(key)
+      if (fail) throw new RuntimeException("stage failed")
+      Import.defaultImportStage(s, c, staged, dbPath)
+    }
+    spark.conf.set(key, "7")
+    try {
+      val cfg = mkCfg(root, feed, "w").copy(importStage = Some(recording(fail = false)),
+        now = () => 1700000300L)
+      val r = Import.importGtfsAtomically(spark, cfg)
+      assert(!r.importSkipped)
+      val expected = graft.ops.ShuffleWidth.forDir(
+        cfg.tmpDir.resolve("gtfs-feed").toString, spark.sparkContext.defaultParallelism)
+      assert(seen === Seq(expected.toString))
+      assert(spark.conf.get(key) === "7")
+
+      // an aborted import (the T3/T6 shape) restores the width too
+      val feed2 = TestFeed.writeTo(Files.createTempDirectory("fw2"),
+        _.updated("feed_info.txt",
+          "feed_publisher_name,feed_publisher_url,feed_lang\nMetroW,https://mw,EN\n"))
+      intercept[RuntimeException] {
+        Import.importGtfsAtomically(spark, mkCfg(root, feed2, "w2").copy(
+          importStage = Some(recording(fail = true)), now = () => 1700000310L))
+      }
+      assert(seen.size === 2, "the failing stage ran")
+      assert(spark.conf.get(key) === "7")
+    } finally spark.conf.set(key, sessionWidth)
+  }
+
   test("P3: dangling meta rows (db dir gone) are reconciled away") {
     val root = Files.createTempDirectory("store-dangling")
     val store = MetaStore(root.toString)

@@ -1,12 +1,14 @@
 package graft.gtfs
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** gtfsclean's flag-controlled cleaning transforms (SURVEY.md §2.4
-  * C1-C19; flags assembled at /root/reference/import.sh:44-111), as
-  * DataFrame → DataFrame programs over a [[Clean.Feed]].
+/** gtfsclean's cleaning transforms (SURVEY.md §2.4 C1-C19), as
+  * DataFrame → DataFrame programs over a [[Clean.Feed]]. The reference
+  * hard-codes gtfsclean's flags (import.sh:44-111), so [[Clean.stages]]
+  * runs all 14 stages in that order; the only setting is
+  * [[Clean.Config]]'s C17 switch, which skips cleaning entirely.
   *
   * Scale design: every merge is groupBy-attrs + min(id) canonical +
   * remap join (no collects of fact-scale state); ordered-collect
@@ -19,25 +21,16 @@ object Clean {
   /** A GTFS feed: entity name → DataFrame (missing entities absent). */
   type Feed = Map[String, DataFrame]
 
-  /** Mirror of the reference's flag defaults (import.sh:44-100). */
-  final case class Config(
-      defaultOnErrs: Boolean = true,       // C2
-      dropErrs: Boolean = true,            // C3
-      checkNullCoords: Boolean = true,     // C4
-      keepAdditionalFields: Boolean = false, // C5 (off = drop non-spec cols)
-      keepIds: Boolean = true,             // C6
-      minShapes: Boolean = true,           // C7
-      minShapesEpsilonDeg: Double = 1e-5,
-      minimizeServices: Boolean = true,    // C8
-      minimizeStoptimes: Boolean = true,   // C9
-      deleteOrphans: Boolean = true,       // C10
-      removeRedAgencies: Boolean = true,   // C11
-      removeRedRoutes: Boolean = true,     // C12
-      removeRedServices: Boolean = true,   // C13
-      removeRedShapes: Boolean = true,     // C14
-      removeRedStops: Boolean = true,      // C15
-      removeRedTrips: Boolean = true,      // C16
-      enabled: Boolean = true)             // C17 GTFSTIDY_BEFORE_IMPORT
+  /** The one cleaning switch a deployment sets: C17
+    * GTFSTIDY_BEFORE_IMPORT (import.sh:38). Every stage's own flag is
+    * hard-coded on, as the reference hard-codes gtfsclean's flags
+    * (import.sh:44-100). */
+  final case class Config(enabled: Boolean = true) {
+    /** C7's Douglas-Peucker tolerance, in degrees. */
+    def minShapesEpsilonDeg: Double = MinShapesEpsilonDeg
+  }
+
+  private val MinShapesEpsilonDeg = 1e-5
 
   /** Lineage barrier between pipeline stages. Each cleaning stage
     * re-references several entities' plans; composed lazily, the
@@ -55,28 +48,29 @@ object Clean {
   private def barrier(feed: Feed): Feed =
     feed.map { case (n, df) => n -> graft.ops.Checkpoints.pin(df) }
 
-  /** Run the enabled stages in the reference's order. */
-  def apply(feed: Feed, cfg: Config = Config())(implicit spark: SparkSession): Feed = {
-    if (!cfg.enabled) return feed // C17 bypass (import.sh:38)
-    var f = feed
-    def step(enabled: Boolean, stage: Feed => Feed): Unit =
-      if (enabled) f = barrier(stage(f))
-    step(!cfg.keepAdditionalFields, keepSpecColumns)
-    step(cfg.defaultOnErrs, defaultOnErrs)
-    step(cfg.dropErrs, dropErrs)
-    step(cfg.checkNullCoords, checkNullCoords)
-    step(cfg.removeRedAgencies, removeRedundantAgencies)
-    step(cfg.removeRedStops, removeRedundantStops)
-    step(cfg.removeRedRoutes, removeRedundantRoutes)
-    step(cfg.removeRedServices, removeRedundantServices(_))
-    step(cfg.minimizeServices, minimizeServices(_))
-    step(cfg.minimizeStoptimes, minimizeStopTimes(_))
-    step(cfg.minShapes, minShapes(_, cfg.minShapesEpsilonDeg))
-    step(cfg.removeRedShapes, removeRedundantShapes)
-    step(cfg.removeRedTrips, removeRedundantTrips)
-    step(cfg.deleteOrphans, deleteOrphans)
-    f
-  }
+  /** The stages in the reference's order (import.sh:44-100): each
+    * stage's name in the clean log (C18) and its transform. */
+  val stages: Seq[(String, SparkSession => Feed => Feed)] = Seq(
+    ("keep-spec-columns", _ => keepSpecColumns),
+    ("default-on-errs", _ => defaultOnErrs),
+    ("drop-errs", _ => dropErrs),
+    ("check-null-coords", _ => checkNullCoords),
+    ("remove-red-agencies", _ => removeRedundantAgencies),
+    ("remove-red-stops", _ => removeRedundantStops),
+    ("remove-red-routes", _ => removeRedundantRoutes),
+    ("remove-red-services", s => removeRedundantServices(_)(s)),
+    ("minimize-services", s => minimizeServices(_)(s)),
+    ("minimize-stoptimes", s => minimizeStopTimes(_)(s)),
+    ("min-shapes", s => minShapes(_, MinShapesEpsilonDeg)(s)),
+    ("remove-red-shapes", _ => removeRedundantShapes),
+    ("remove-red-trips", _ => removeRedundantTrips),
+    ("delete-orphans", _ => deleteOrphans))
+
+  /** Run every stage in order, with a [[barrier]] after each; with
+    * cleaning disabled the feed passes through untouched. */
+  def apply(feed: Feed, cfg: Config = Config())(implicit spark: SparkSession): Feed =
+    if (!cfg.enabled) feed // C17 bypass (import.sh:38)
+    else stages.foldLeft(feed) { case (f, (_, stage)) => barrier(stage(spark)(f)) }
 
   // C5 --keep-additional-fields=off: project to spec columns only.
   def keepSpecColumns(feed: Feed): Feed =
@@ -162,6 +156,15 @@ object Clean {
       .withColumn(fk, coalesce(col("canonical"), col(fk)))
       .drop("_rk", "canonical")
 
+  /** Merge by signature: canonical id = min(id) over the rows with an
+    * equal `sig` column. Returns (id→canonical remap, canonical ids). */
+  private def canonicalIds(sigs: DataFrame, id: String, sig: String)
+      : (DataFrame, DataFrame) = {
+    val remap = sigs.withColumn("canonical", min(id).over(Window.partitionBy(sig)))
+      .select(col(id), col("canonical"))
+    (remap, remap.where(col(id) === col("canonical")).select(id))
+  }
+
   // C11 --remove-red-agencies (import.sh:83-85)
   def removeRedundantAgencies(feed: Feed): Feed =
     (feed.get("agency"), feed.get("routes")) match {
@@ -228,12 +231,7 @@ object Clean {
   // C13 --remove-red-services (import.sh:89-91): identical date sets.
   def removeRedundantServices(feed: Feed)(implicit spark: SparkSession): Feed = {
     if (!feed.contains("calendar") && !feed.contains("calendar_dates")) return feed
-    val sig = serviceSignatures(feed)
-    val w = Window.partitionBy("dsig")
-    val remap = sig.withColumn("canonical", min("service_id").over(w))
-      .select(col("service_id"), col("canonical"))
-    val keep = remap.where(col("service_id") === col("canonical"))
-      .select("service_id")
+    val (remap, keep) = canonicalIds(serviceSignatures(feed), "service_id", "dsig")
     var f = feed
     feed.get("calendar").foreach { c =>
       f = f.updated("calendar", c.join(keep, Seq("service_id"), "left_semi"))
@@ -284,11 +282,7 @@ object Clean {
   def removeRedundantShapes(feed: Feed): Feed =
     feed.get("shapes") match {
       case Some(shapes) =>
-        val sig = shapeSignatures(shapes)
-        val w = Window.partitionBy("ssig")
-        val remap = sig.withColumn("canonical", min("shape_id").over(w))
-          .select(col("shape_id"), col("canonical"))
-        val keep = remap.where(col("shape_id") === col("canonical")).select("shape_id")
+        val (remap, keep) = canonicalIds(shapeSignatures(shapes), "shape_id", "ssig")
         var f = feed.updated("shapes", shapes.join(keep, Seq("shape_id"), "left_semi"))
         feed.get("trips").foreach { t =>
           f = f.updated("trips", remapFk(t, "shape_id", remap, "shape_id"))
@@ -297,32 +291,36 @@ object Clean {
       case None => feed
     }
 
-  /** Ordered stop-time-sequence signature per trip (bounded group:
-    * stops per trip). Times relative to the trip's first departure so
-    * time-shifted but otherwise identical trips do NOT merge (matching
-    * gtfsclean, which folds those via frequencies instead — C9). */
+  /** Per trip: its first departure `t0` and `rsig`, a digest of its
+    * ordered stop sequence with times relative to `t0` (bounded group:
+    * stops per trip). C9 folds trips equal on `rsig` into frequencies;
+    * C16 merges trips equal on it AND on `t0`. */
+  private def relativeStopTimeSignatures(st: DataFrame): DataFrame =
+    st.select(col("trip_id"), col("stop_sequence"), col("stop_id"),
+        GtfsTime.toSeconds(col("arrival_time")).as("arr_s"),
+        GtfsTime.toSeconds(col("departure_time")).as("dep_s"))
+      .groupBy("trip_id")
+      .agg(min("dep_s").as("t0"),
+        array_sort(collect_list(struct(col("stop_sequence"), col("stop_id"),
+          col("arr_s"), col("dep_s")))).as("seq"))
+      .select(col("trip_id"), col("t0"),
+        sha2(array_join(transform(col("seq"), x => concat_ws(":",
+          x.getField("stop_id"),
+          (x.getField("arr_s") - col("t0")).cast("string"),
+          (x.getField("dep_s") - col("t0")).cast("string"))), "|"), 256).as("rsig"))
+
+  /** Full signature per trip: route, service, relative stop times and
+    * `t0`, so time-shifted but otherwise identical trips do NOT merge
+    * (matching gtfsclean, which folds those via frequencies instead —
+    * C9). */
   private def tripSignatures(feed: Feed): Option[DataFrame] =
     (feed.get("trips"), feed.get("stop_times")) match {
       case (Some(trips), Some(st)) =>
-        val sig = st
-          .select(col("trip_id"), col("stop_sequence"), col("stop_id"),
-            GtfsTime.toSeconds(col("arrival_time")).as("arr_s"),
-            GtfsTime.toSeconds(col("departure_time")).as("dep_s"))
-          .groupBy("trip_id")
-          .agg(
-            min("dep_s").as("t0"),
-            array_sort(collect_list(struct(col("stop_sequence"), col("stop_id"),
-              col("arr_s"), col("dep_s")))).as("seq"))
-          .select(col("trip_id"), col("t0"),
-            sha2(array_join(transform(col("seq"), x => concat_ws(":",
-              x.getField("stop_id"),
-              (x.getField("arr_s") - col("t0")).cast("string"),
-              (x.getField("dep_s") - col("t0")).cast("string"))), "|"), 256).as("stsig"))
-        Some(trips.join(sig, Seq("trip_id"), "left")
+        Some(trips.join(relativeStopTimeSignatures(st), Seq("trip_id"), "left")
           .withColumn("tsig", sha2(concat_ws("#",
             coalesce(col("route_id"), lit("")),
             coalesce(col("service_id"), lit("")),
-            coalesce(col("stsig"), lit("")),
+            coalesce(col("rsig"), lit("")),
             coalesce(col("t0").cast("string"), lit(""))), 256))
           .select("trip_id", "tsig"))
       case _ => None
@@ -332,10 +330,7 @@ object Clean {
   def removeRedundantTrips(feed: Feed): Feed =
     tripSignatures(feed) match {
       case Some(sig) =>
-        val w = Window.partitionBy("tsig")
-        val remap = sig.withColumn("canonical", min("trip_id").over(w))
-          .select(col("trip_id"), col("canonical"))
-        val keep = remap.where(col("trip_id") === col("canonical")).select("trip_id")
+        val (remap, keep) = canonicalIds(sig, "trip_id", "tsig")
         var f = feed
         feed.get("trips").foreach { t =>
           f = f.updated("trips", t.join(keep, Seq("trip_id"), "left_semi"))
@@ -447,20 +442,7 @@ object Clean {
   def minimizeStopTimes(feed: Feed)(implicit spark: SparkSession): Feed =
     (feed.get("trips"), feed.get("stop_times")) match {
       case (Some(trips), Some(st)) =>
-        val rel = st
-          .select(col("trip_id"), col("stop_sequence"), col("stop_id"),
-            GtfsTime.toSeconds(col("arrival_time")).as("arr_s"),
-            GtfsTime.toSeconds(col("departure_time")).as("dep_s"))
-          .groupBy("trip_id")
-          .agg(min("dep_s").as("t0"),
-            array_sort(collect_list(struct(col("stop_sequence"), col("stop_id"),
-              col("arr_s"), col("dep_s")))).as("seq"))
-          .select(col("trip_id"), col("t0"),
-            sha2(array_join(transform(col("seq"), x => concat_ws(":",
-              x.getField("stop_id"),
-              (x.getField("arr_s") - col("t0")).cast("string"),
-              (x.getField("dep_s") - col("t0")).cast("string"))), "|"), 256).as("rsig"))
-        val keyed = trips.join(rel, Seq("trip_id"))
+        val keyed = trips.join(relativeStopTimeSignatures(st), Seq("trip_id"))
           .select(col("trip_id"), col("route_id"), col("service_id"),
             col("rsig"), col("t0"))
         val wOrd = Window.partitionBy("route_id", "service_id", "rsig")

@@ -126,11 +126,10 @@ object Schemas {
     * misassigns columns — found by CleanSpec). Values are typed via
     * try_cast: unparseable cells become NULL for the C2/C3 machinery to
     * default or drop (PERMISSIVE, the C1 --fix-zip analog) instead of
-    * failing the scan under ANSI mode. `keepExtra` preserves non-spec
-    * columns (C5 --keep-additional-fields). */
-  def readEntity(spark: SparkSession, dir: String, entity: String,
-      keepExtra: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr, lit}
+    * failing the scan under ANSI mode. Non-spec columns are not read
+    * (C5 --keep-additional-fields=off). */
+  def readEntity(spark: SparkSession, dir: String, entity: String): DataFrame = {
+    import org.apache.spark.sql.functions.{expr, lit}
     val schema = all(entity)
     val raw = spark.read
       .option("header", "true")
@@ -149,9 +148,6 @@ object Schemas {
         expr(s"try_cast(`${f.name}` AS ${f.dataType.sql})").as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }
-    val extra =
-      if (!keepExtra) Array.empty[org.apache.spark.sql.Column]
-      else raw.columns.filterNot(schema.fieldNames.contains).map(col)
-    raw.select(spec ++ extra: _*)
+    raw.select(spec: _*)
   }
 }

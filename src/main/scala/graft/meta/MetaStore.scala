@@ -82,18 +82,21 @@ final class MetaStore(root: Path) {
     lockChannel = null
   }
 
+  /** The import rows of a TSV table file (dbName, importedAt,
+    * feedDigest); a missing file has none. */
+  private def readRows(path: Path): Vector[SuccessfulImport] =
+    if (!Files.exists(path)) Vector.empty
+    else Files.readAllLines(path).asScala.toVector.filter(_.nonEmpty).map { line =>
+      val Array(n, ts, dg) = line.split("\t", 3)
+      SuccessfulImport(n, ts.toLong, dg)
+    }
+
   // ---- S4: bookkeeping scan (ORDER BY imported_at DESC) ------------
-  def listImports(prefix: String): Seq[SuccessfulImport] = {
-    val all =
-      if (!Files.exists(tableFile)) Seq.empty
-      else Files.readAllLines(tableFile).asScala.toSeq.filter(_.nonEmpty).map { line =>
-        val Array(n, ts, dg) = line.split("\t", 3)
-        SuccessfulImport(n, ts.toLong, dg)
-      }
-    // P2 prefix predicate + sort desc (index.js:183-198); dbName breaks
-    // imported_at ties so "latest" is deterministic
-    all.filter(_.dbName.startsWith(prefix)).sortBy(r => (-r.importedAt, r.dbName))
-  }
+  // P2 prefix predicate + sort desc (index.js:183-198); dbName breaks
+  // imported_at ties so "latest" is deterministic
+  def listImports(prefix: String): Seq[SuccessfulImport] =
+    readRows(tableFile).filter(_.dbName.startsWith(prefix))
+      .sortBy(r => (-r.importedAt, r.dbName))
 
   // ---- S5: catalog scan (ORDER BY name ASC, self-excluded) ---------
   def listDatabases(prefix: String): Seq[String] =
@@ -129,13 +132,7 @@ final class MetaStore(root: Path) {
     * table IF body completes — the single commit point. On exception
     * nothing is published (ROLLBACK, import.js:310-316). */
   def transact[A](body: Vector[SuccessfulImport] => (Vector[SuccessfulImport], A)): A = {
-    val current =
-      if (!Files.exists(tableFile)) Vector.empty[SuccessfulImport]
-      else Files.readAllLines(tableFile).asScala.toVector.filter(_.nonEmpty).map { l =>
-        val Array(n, ts, dg) = l.split("\t", 3)
-        SuccessfulImport(n, ts.toLong, dg)
-      }
-    val (next, result) = body(current)
+    val (next, result) = body(readRows(tableFile))
     val tmp = metaDir.resolve(s".latest_successful_imports.tmp")
     val lines = next.map(r => s"${r.dbName}\t${r.importedAt}\t${r.feedDigest}")
     Files.write(tmp, lines.asJava,
@@ -181,14 +178,8 @@ final class MetaStore(root: Path) {
 
   /** The import rows frozen in manifest version `v` (empty for v0 or a
     * pruned version). */
-  def listImportsAt(v: Long): Seq[SuccessfulImport] = {
-    val f = versionFile(v)
-    if (v == 0L || !Files.exists(f)) Seq.empty
-    else Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty).map { l =>
-      val Array(n, ts, dg) = l.split("\t", 3)
-      SuccessfulImport(n, ts.toLong, dg)
-    }
-  }
+  def listImportsAt(v: Long): Seq[SuccessfulImport] =
+    if (v == 0L) Seq.empty else readRows(versionFile(v))
 
   private def publishVersion(lines: Seq[String]): Unit = {
     val v = currentVersion() + 1

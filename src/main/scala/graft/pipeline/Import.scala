@@ -28,7 +28,11 @@ object Import {
   type ImportStage = (SparkSession, Config, Path, Path) => Clean.Feed
 
   /** Config mirror of import.js:57-77 (cfg > env > default merge is the
-    * caller's concern; this is the merged result). */
+    * caller's concern; this is the merged result). Cleaning has one
+    * setting, C17's on/off switch; its stages are fixed, as in the
+    * reference. The user hooks are `preprocessScript` and
+    * `postprocessingDir`; both are part of the feed digest, so editing
+    * one defeats skip-if-unchanged. */
   final case class Config(
       feedSource: Path,                       // zip file or extracted dir (S1 output)
       storeRoot: Path,                        // MetaStore root
@@ -37,7 +41,6 @@ object Import {
       feedUrl: Option[String] = None,         // S1: mirror-download first if set
       userAgent: String = "",                 // mandatory when feedUrl is set
       postprocessingDir: Option[Path] = None, // hashed into digest (H3) AND executed (§2.11)
-      preprocess: Option[Clean.Feed => Clean.Feed] = None, // C19 hook
       // C19 shell-out analog of /etc/gtfs/preprocess.sh
       // (/root/reference/import.sh:32-35): an executable run over the
       // extracted CSV dir BEFORE cleaning, so a reference deployment's
@@ -45,12 +48,10 @@ object Import {
       // (like postprocessing.d) so editing the script defeats
       // skip-if-unchanged.
       preprocessScript: Option[Path] = None,
-      postprocessSql: Seq[String] = Seq.empty, // run via spark.sql on entity views
-      cleanConfig: Clean.Config = Clean.Config(),
+      cleanConfig: Clean.Config = Clean.Config(), // C17: cleaning on or off
       determineDbsToRetain: Retention.Policy = Retention.newestTwo,
       continueOnDeleteFailure: Boolean = false, // GTFS_IMPORTED_CONTINUE_ON_FAILURE_DELETING_OLD_DB
       dsnFilePath: Option[Path] = None,       // K4 PgBouncer routing file
-      defaultTz: String = "UTC",
       materializeViews: Boolean = false,      // write V1/V2 into the import (gtfs-via-postgres materialized views)
       // K1: also bulk-load entities into a relational DB, one schema per
       // import (named after the import db); publish stays with the meta
@@ -187,17 +188,15 @@ object Import {
         Views.serviceDays(feed).write.mode("overwrite")
           .parquet(dbPath.resolve("service_days").toString)
         Views.materializeArrivalsDepartures(feed,
-          dbPath.resolve("arrivals_departures").toString, cfg.defaultTz)
+          dbPath.resolve("arrivals_departures").toString)
       }
-      // §2.11 postprocessing: inline SQL strings, then the
-      // postprocessing.d directory (import.sh:134-148) — *.sql files
-      // via spark.sql against the registered entity views and non-.sql
-      // executables via ProcessBuilder, in filename order, dotfiles
-      // excluded (they are excluded from the digest too, P6).
-      val hasPpDir = cfg.postprocessingDir.exists(Files.isDirectory(_))
-      if (cfg.postprocessSql.nonEmpty || hasPpDir) {
+      // §2.11 postprocessing: the postprocessing.d directory
+      // (import.sh:134-148) — *.sql files via spark.sql against the
+      // registered entity views and non-.sql executables via
+      // ProcessBuilder, in filename order, dotfiles excluded (they are
+      // excluded from the digest too, P6).
+      if (cfg.postprocessingDir.exists(Files.isDirectory(_))) {
         registerViews(spark, dbPath)
-        cfg.postprocessSql.foreach(execSql(spark, _))
         // executables get the gtfs DIR as argv[1] (reference contract,
         // import.sh:140-145): the default stage's extraction dir when
         // it ran; with an importStage override (which need not extract
@@ -266,7 +265,7 @@ object Import {
   // ---- helpers ------------------------------------------------------
 
   /** The default import stage (what GTFS_IMPORT_SCRIPT would replace):
-    * unzip + schema'd CSV scan (S2/S3), C19 preprocess hook, C1-C16
+    * unzip, C19 preprocess script, schema'd CSV scan (S2/S3), C1-C16
     * cleaning, K1 parquet load into the fresh db dir. */
   def defaultImportStage(spark: SparkSession, cfg: Config, staged: Path,
       dbPath: Path): Clean.Feed = {
@@ -279,11 +278,8 @@ object Import {
         s"preprocess script ${script.getFileName} is not executable — chmod +x it")
       runScript(script, extractDir, dbPath)
     }
-    implicit val s: SparkSession = spark
-    var feed = readFeed(spark, extractDir)
-    feed = lowerLangCodes(feed)           // L2 (import.sh:125)
-    feed = cfg.preprocess.map(_(feed)).getOrElse(feed)
-    feed = Clean(feed, cfg.cleanConfig)
+    // L2 lower-cased language codes (import.sh:125), then cleaning
+    val feed = Clean(lowerLangCodes(readFeed(spark, extractDir)), cfg.cleanConfig)(spark)
     writeFeed(feed, dbPath)
     feed
   }
@@ -451,29 +447,17 @@ object Import {
   }
 
   /** C18: persist the cleaning log alongside the import (the
-    * `tidied.gtfs.gtfstidy-log.txt` artifact, import.sh:105-109). */
+    * `tidied.gtfs.gtfstidy-log.txt` artifact, import.sh:105-109). It
+    * records the configured stages, in [[Clean.stages]]' order: all on,
+    * or all off when cleaning is disabled. */
   private def writeCleanLog(cfg: Config, feed: Clean.Feed, dbPath: Path,
       digest: String, importedAt: Long): Unit = {
-    val c = cfg.cleanConfig
-    val stages = Seq(
-      "keep-spec-columns" -> !c.keepAdditionalFields,
-      "default-on-errs" -> c.defaultOnErrs, "drop-errs" -> c.dropErrs,
-      "check-null-coords" -> c.checkNullCoords,
-      "remove-red-agencies" -> c.removeRedAgencies,
-      "remove-red-stops" -> c.removeRedStops,
-      "remove-red-routes" -> c.removeRedRoutes,
-      "remove-red-services" -> c.removeRedServices,
-      "minimize-services" -> c.minimizeServices,
-      "minimize-stoptimes" -> c.minimizeStoptimes,
-      "min-shapes" -> c.minShapes,
-      "remove-red-shapes" -> c.removeRedShapes,
-      "remove-red-trips" -> c.removeRedTrips,
-      "delete-orphans" -> c.deleteOrphans)
+    val enabled = cfg.cleanConfig.enabled
     val lines = Seq(
       s"feed_digest\t$digest", s"imported_at\t$importedAt",
-      s"cleaning_enabled\t${c.enabled}",
+      s"cleaning_enabled\t$enabled",
       s"entities\t${feed.keys.toSeq.sorted.mkString(",")}") ++
-      stages.map { case (n, on) => s"stage\t$n\t${if (on) "on" else "off"}" }
+      Clean.stages.map { case (n, _) => s"stage\t$n\t${if (enabled) "on" else "off"}" }
     Files.write(dbPath.resolve("clean-log.txt"), lines.asJava)
   }
 

@@ -289,6 +289,28 @@ class ImportPipelineSpec extends SparkSpec {
     assert(logTxt.contains("delete-orphans\ton") && logTxt.contains("feed_digest"))
   }
 
+  test("C18: the clean log names the 14 stages in order, all off with cleaning disabled") {
+    import scala.jdk.CollectionConverters._
+    val feed = TestFeed.writeTo(Files.createTempDirectory("flog"))
+    // the log records the configured stages, so an import stage that
+    // returns no entities is enough
+    def stageLines(clean: Boolean): Seq[String] = {
+      val root = Files.createTempDirectory(s"store-log-$clean")
+      val r = Import.importGtfsAtomically(spark, mkCfg(root, feed, "log", clean)
+        .copy(importStage = Some((_, _, _, _) => Map.empty)))
+      val log = MetaStore(root.toString).databasePath(r.newImport.get.dbName)
+        .resolve("clean-log.txt")
+      Files.readAllLines(log).asScala.toSeq.filter(_.startsWith("stage\t"))
+    }
+    val names = Seq("keep-spec-columns", "default-on-errs", "drop-errs",
+      "check-null-coords", "remove-red-agencies", "remove-red-stops",
+      "remove-red-routes", "remove-red-services", "minimize-services",
+      "minimize-stoptimes", "min-shapes", "remove-red-shapes", "remove-red-trips",
+      "delete-orphans")
+    assert(stageLines(clean = true) == names.map(n => s"stage\t$n\ton"))
+    assert(stageLines(clean = false) == names.map(n => s"stage\t$n\toff"))
+  }
+
   test("K1 JDBC: per-import schema load; retention drops the old schema") {
     import graft.sinks.JdbcSink
     val url = "jdbc:derby:memory:graftpipe;create=true"

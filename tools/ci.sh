@@ -1,10 +1,11 @@
 #!/usr/bin/env bash
 # The round's single test entry point (r16 VERDICT #6): the scalatest
-# suite AND the end-to-end importer smoke in one command that fails
-# red on either. tools/smoke_importer.sh runs its own `sbt -batch
-# package` — sequencing it AFTER the test run (instead of shelling it
-# from inside a suite) avoids nested sbt servers fighting over the
-# project lock, and keeps `sbt test` itself fast for inner-loop use.
+# suite, the benchmark's compile and the end-to-end importer smoke in
+# one command that fails red on any of them. tools/smoke_importer.sh
+# runs its own `sbt -batch package` — sequencing it AFTER the test run
+# (instead of shelling it from inside a suite) avoids nested sbt
+# servers fighting over the project lock, and keeps `sbt test` itself
+# fast for inner-loop use.
 #
 # The suite runs with the same settings as ROADMAP.md's tier-1 verify
 # command: offline dependency resolution, one Spark core per CPU, and
@@ -23,6 +24,19 @@ export SPARK_LOCAL_DIRS=/tmp/spark-local
 
 echo "[ci] sbt test"
 sbt --batch -Dsbt.log.noformat=true "testOnly *"
+
+# The benchmark (perfbench/) compiles the program's sources together
+# with its own, so an API change that breaks it must fail here, not only
+# when the benchmark runs. Same environment as perfbench/run.py's
+# build(): offline, Spark jars from $SPARK_HOME/jars or else the
+# directory build.sbt's unmanagedBase names.
+if [ -n "${SPARK_HOME:-}" ]; then
+  spark_jars="$SPARK_HOME/jars"
+else
+  spark_jars="$(sed -n 's/^unmanagedBase *:= *file("\([^"]*\)").*/\1/p' build.sbt)"
+fi
+echo "[ci] perfbench compile"
+(cd perfbench && PERFBENCH_SPARK_JARS="$spark_jars" sbt --batch -Dsbt.log.noformat=true compile)
 
 echo "[ci] importer smoke"
 tools/smoke_importer.sh

@@ -515,55 +515,57 @@ object Clean {
       case _ => feed
     }
 
-  // C10 --delete-orphans (import.sh:80-82): cascade left-semi joins in
-  // dependency order; two passes cover GTFS's reference DAG.
+  // C10 --delete-orphans (import.sh:80-82): one pass of left-semi joins
+  // in the order of GTFS's reference graph. A later step drops only rows
+  // that no surviving row references, so the result is a fixed point.
   def deleteOrphans(feed: Feed): Feed = {
     var f = feed
-    def pass(): Unit = {
-      // trips must reference existing routes and services
-      for (trips <- f.get("trips")) {
-        var t = trips
-        f.get("routes").foreach(r =>
-          t = t.join(r.select("route_id"), Seq("route_id"), "left_semi"))
-        val serviceIds = (f.get("calendar").map(_.select("service_id")).toSeq ++
-          f.get("calendar_dates").map(_.select("service_id")).toSeq)
-          .reduceOption(_ unionByName _).map(_.distinct())
-        serviceIds.foreach(s =>
-          t = t.join(s, Seq("service_id"), "left_semi"))
-        f = f.updated("trips", t)
-      }
-      // stop_times must reference existing trips and stops
-      for (st <- f.get("stop_times")) {
-        var s = st
-        f.get("trips").foreach(t =>
-          s = s.join(t.select("trip_id"), Seq("trip_id"), "left_semi"))
-        f.get("stops").foreach(stp =>
-          s = s.join(stp.select("stop_id"), Seq("stop_id"), "left_semi"))
-        f = f.updated("stop_times", s)
-      }
-      // trips without any stop_times are dead
-      for (trips <- f.get("trips"); st <- f.get("stop_times"))
-        f = f.updated("trips",
-          trips.join(st.select("trip_id").distinct(), Seq("trip_id"), "left_semi"))
-      // frequencies referencing dropped trips
-      for (fr <- f.get("frequencies"); trips <- f.get("trips"))
-        f = f.updated("frequencies",
-          fr.join(trips.select("trip_id"), Seq("trip_id"), "left_semi"))
-      // unreferenced shapes
-      for (sh <- f.get("shapes"); trips <- f.get("trips"))
-        f = f.updated("shapes", sh.join(
-          trips.select("shape_id").where(col("shape_id").isNotNull).distinct(),
-          Seq("shape_id"), "left_semi"))
-      // unreferenced stops (keep stations referenced via parent_station)
-      for (stops <- f.get("stops"); st <- f.get("stop_times")) {
-        val referenced = st.select("stop_id").distinct()
-          .unionByName(stops.select(col("parent_station").as("stop_id"))
-            .where(col("stop_id").isNotNull).distinct())
-          .distinct()
-        f = f.updated("stops", stops.join(referenced, Seq("stop_id"), "left_semi"))
-      }
+    // trips must reference existing routes and services
+    for (trips <- f.get("trips")) {
+      var t = trips
+      f.get("routes").foreach(r =>
+        t = t.join(r.select("route_id"), Seq("route_id"), "left_semi"))
+      val serviceIds = (f.get("calendar").map(_.select("service_id")).toSeq ++
+        f.get("calendar_dates").map(_.select("service_id")).toSeq)
+        .reduceOption(_ unionByName _).map(_.distinct())
+      serviceIds.foreach(s =>
+        t = t.join(s, Seq("service_id"), "left_semi"))
+      f = f.updated("trips", t)
     }
-    pass(); pass()
+    // stop_times must reference existing trips and stops
+    for (st <- f.get("stop_times")) {
+      var s = st
+      f.get("trips").foreach(t =>
+        s = s.join(t.select("trip_id"), Seq("trip_id"), "left_semi"))
+      f.get("stops").foreach(stp =>
+        s = s.join(stp.select("stop_id"), Seq("stop_id"), "left_semi"))
+      f = f.updated("stop_times", s)
+    }
+    // trips without any stop_times are dead
+    for (trips <- f.get("trips"); st <- f.get("stop_times"))
+      f = f.updated("trips",
+        trips.join(st.select("trip_id").distinct(), Seq("trip_id"), "left_semi"))
+    // frequencies referencing dropped trips
+    for (fr <- f.get("frequencies"); trips <- f.get("trips"))
+      f = f.updated("frequencies",
+        fr.join(trips.select("trip_id"), Seq("trip_id"), "left_semi"))
+    // unreferenced shapes
+    for (sh <- f.get("shapes"); trips <- f.get("trips"))
+      f = f.updated("shapes", sh.join(
+        trips.select("shape_id").where(col("shape_id").isNotNull).distinct(),
+        Seq("shape_id"), "left_semi"))
+    // unreferenced stops: keep the used ones and their parent chain, up
+    // to the station above a boarding area (boarding area → platform →
+    // station, the deepest chain GTFS allows)
+    for (stops <- f.get("stops"); st <- f.get("stop_times")) {
+      val parentOf = stops.select("stop_id", "parent_station")
+      def parents(ids: DataFrame): DataFrame = ids.join(parentOf, "stop_id")
+        .select(col("parent_station").as("stop_id")).where(col("stop_id").isNotNull)
+      val used = st.select("stop_id").distinct()
+      val usedParents = parents(used)
+      val kept = used.unionByName(usedParents).unionByName(parents(usedParents)).distinct()
+      f = f.updated("stops", stops.join(kept, Seq("stop_id"), "left_semi"))
+    }
     f
   }
 }

@@ -215,14 +215,17 @@ object Import {
           gtfsDirForScripts, dbPath)
       }
 
-      // K2 + K4 + T5: stage the commit record, write the DSN file,
-      // publish atomically (import.js:279-311).
+      // K2 + T5: publish the commit record atomically (import.js:279-311);
+      // only then K4: write the DSN file. A failed publish leaves clients
+      // on the previous import, not on a db the next run reaps as an
+      // orphan; a failed DSN write leaves them on the previous import,
+      // which retention keeps.
       val rec = SuccessfulImport(dbName, importedAt, feedDigest)
-      cfg.dsnFilePath.foreach(p => store.writeDsnFile(p, dbName))
       store.transact { _ =>
         val next = live.filterNot(r => deleted.contains(r.dbName)).toVector :+ rec
         (next, ())
       }
+      cfg.dsnFilePath.foreach(p => store.writeDsnFile(p, dbName))
       Result(downloadMs, deleted, retained :+ dbName, importSkipped = false,
         Some(rec), (System.nanoTime() - tImport) / 1000000)
     } finally {

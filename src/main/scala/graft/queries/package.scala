@@ -48,11 +48,4 @@ package object queries {
     * produce bit-identical BIGINTs regardless of aggregation order.
     */
   def sumCents(c: Column): Column = sum(round(c * 100).cast("long"))
-
-  /** Exact order-independent sum of arbitrary doubles via DECIMAL(38,12);
-    * cast back to double at the end. DuckDB analog:
-    * `CAST(sum(CAST(x AS DECIMAL(38,12))) AS DOUBLE)`.
-    */
-  def sumExact(c: Column): Column =
-    sum(c.cast("decimal(38,12)")).cast("double")
 }

@@ -1,13 +1,15 @@
 package graft.gtfs
 
 import graft.SparkSpec
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Generative properties for the two subtle cleaning transforms:
+/** Generative properties for the subtle cleaning transforms:
   * C8 (minimize-services) must preserve the expanded date set exactly,
-  * and C9 (minimize-stoptimes) must preserve the departure multiset
-  * when folded frequencies are re-expanded. Random inputs, fixed seed. */
+  * C9 (minimize-stoptimes) must preserve the departure multiset when
+  * folded frequencies are re-expanded, and C10 (delete-orphans) must
+  * leave every reference resolved and every kept row used, as a fixed
+  * point. Random inputs, fixed seed. */
 class CleanPropertySpec extends SparkSpec {
 
   implicit lazy val s: SparkSession = spark
@@ -106,5 +108,77 @@ class CleanPropertySpec extends SparkSpec {
       assert(freqTrips.subsetOf(tripIds),
         s"case $case_i: dangling frequencies trips ${freqTrips -- tripIds}")
     }
+  }
+
+  test("C10 property: references resolve, kept rows are used, a second run is a no-op") {
+    val rnd = new scala.util.Random(17)
+    var orphanChains = 0
+    (1 to 10).foreach { case_i =>
+      def pick[A](xs: Seq[A]): A = xs(rnd.nextInt(xs.size))
+      // "X" ids reference nothing: dangling route, service, trip and stop
+      val routes = (1 to 1 + rnd.nextInt(3)).map(i => s"r$i")
+      val services = (1 to 1 + rnd.nextInt(3)).map(i => s"svc$i")
+      val (calSvc, cdSvc) = services.partition(_ => rnd.nextBoolean())
+      val shapes = (1 to rnd.nextInt(4)).map(i => s"sh$i")
+      // level-3 chains (station ← platform ← boarding area) and plain stops
+      val nChains = 1 + rnd.nextInt(3)
+      val stops: Seq[(String, String)] =
+        (1 to nChains).flatMap(i =>
+          Seq((s"S$i", null: String), (s"P$i", s"S$i"), (s"B$i", s"P$i"))) ++
+          (1 to 1 + rnd.nextInt(3)).map(i => (s"s$i", null: String))
+      val trips = (1 to 3 + rnd.nextInt(5)).map { i =>
+        (s"t$i", if (rnd.nextInt(5) == 0) "rX" else pick(routes),
+          if (rnd.nextInt(5) == 0) "svcX" else pick(services),
+          if (shapes.isEmpty || rnd.nextBoolean()) null else pick(shapes))
+      }
+      val stopIds = stops.map(_._1) :+ "sX"
+      val stopTimes = (trips.map(_._1) :+ "tX")
+        .filter(_ => rnd.nextInt(4) != 0)
+        .flatMap(t => (1 to 1 + rnd.nextInt(3)).map(seq => (t, pick(stopIds), seq)))
+      val freqs = (1 to rnd.nextInt(3))
+        .map(_ => (pick(trips.map(_._1) :+ "tX"), "06:00:00", "07:00:00", 600))
+      val feed: Clean.Feed = Map(
+        "routes" -> routes.toDF("route_id"),
+        "calendar" -> calSvc.map(s => (s, "20240101", "20241231"))
+          .toDF("service_id", "start_date", "end_date"),
+        "calendar_dates" -> cdSvc.map(s => (s, "20240101")).toDF("service_id", "date"),
+        "shapes" -> shapes.flatMap(sh => Seq((sh, 52.0, 13.0, 1), (sh, 52.1, 13.1, 2)))
+          .toDF("shape_id", "shape_pt_lat", "shape_pt_lon", "shape_pt_sequence"),
+        "stops" -> stops.toDF("stop_id", "parent_station"),
+        "trips" -> trips.toDF("trip_id", "route_id", "service_id", "shape_id"),
+        "stop_times" -> stopTimes.toDF("trip_id", "stop_id", "stop_sequence"),
+        "frequencies" -> freqs.toDF("trip_id", "start_time", "end_time", "headway_secs"))
+
+      val out = Clean.deleteOrphans(feed).map { case (n, df) => n -> df.localCheckpoint() }
+      val tr = out("trips").select("trip_id", "route_id", "service_id", "shape_id")
+        .as[(String, String, String, String)].collect().toSeq
+      val st = out("stop_times").select("trip_id", "stop_id").as[(String, String)].collect().toSeq
+      val kept = out("stops").select("stop_id", "parent_station").as[(String, String)]
+        .collect().toMap
+      val freqTrips = out("frequencies").select("trip_id").as[String].collect().toSet
+      val keptShapes = out("shapes").select("shape_id").as[String].collect().toSet
+      val tripIds = tr.map(_._1).toSet
+      val ctx = s"case $case_i: trips=$tr stop_times=$st stops=$kept"
+
+      assert(tr.forall(t => routes.contains(t._2) && services.contains(t._3)), ctx)
+      assert(st.forall { case (t, s) => tripIds(t) && kept.contains(s) }, ctx)
+      assert(st.map(_._1).toSet == tripIds, ctx)
+      assert(freqTrips.subsetOf(tripIds), ctx)
+      assert(kept.values.forall(p => p == null || kept.contains(p)), ctx)
+      // kept stops are exactly the used ones and their parent chains
+      val parentOf = stops.toMap
+      def up(ids: Set[String]) = ids.flatMap(i => Option(parentOf(i)))
+      val used = st.map(_._2).toSet
+      assert(kept.keySet == used ++ up(used) ++ up(up(used)), ctx)
+      assert(keptShapes == tr.flatMap(t => Option(t._4)).toSet, ctx)
+      orphanChains += (1 to nChains).count(i => !kept.contains(s"S$i"))
+
+      val again = Clean.deleteOrphans(out)
+      out.foreach { case (n, df) =>
+        def rows(d: DataFrame) = d.collect().map(_.toString).sorted.toSeq
+        assert(rows(again(n)) == rows(df), s"case $case_i: a second run changed $n")
+      }
+    }
+    assert(orphanChains > 0, "no case had a wholly unused stop chain")
   }
 }

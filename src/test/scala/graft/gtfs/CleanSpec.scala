@@ -79,6 +79,22 @@ class CleanSpec extends SparkSpec {
     assert(!ids(f("stop_times"), "trip_id").contains("torphan"))
   }
 
+  test("C10 keeps a used stop's parent chain: boarding area → platform → station") {
+    import spark.implicits._
+    val stops = Seq[(String, String)](("S", null), ("P", "S"), ("B", "P"), ("X", null))
+      .toDF("stop_id", "parent_station")
+    def keptStops(usedStop: String): Set[String] = ids(Clean.deleteOrphans(Map(
+      "stops" -> stops,
+      "routes" -> Seq("r1").toDF("route_id"),
+      "calendar_dates" -> Seq(("svc1", "20240101")).toDF("service_id", "date"),
+      "trips" -> Seq(("t1", "r1", "svc1")).toDF("trip_id", "route_id", "service_id"),
+      "stop_times" -> Seq(("t1", usedStop, 1)).toDF("trip_id", "stop_id", "stop_sequence")
+    ))("stops"), "stop_id")
+    assert(keptStops("B") == Set("B", "P", "S"))
+    assert(keptStops("X") == Set("X"),
+      "a station whose platform and boarding area are both unused is an orphan")
+  }
+
   test("C8 minimize-services preserves the expanded date set exactly") {
     val before = Views.serviceDays(rawFeed).where("service_id = 'svc1'")
       .select("svc_date").collect().map(_.getDate(0).toString).toSet

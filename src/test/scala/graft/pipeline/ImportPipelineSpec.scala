@@ -140,6 +140,40 @@ class ImportPipelineSpec extends SparkSpec {
     assert(store.listImports("gtfs_").size == 1)
   }
 
+  test("K4/T5: a failed publish leaves the DSN file on the previous import") {
+    val root = Files.createTempDirectory("store-dsn")
+    val store = MetaStore(root.toString)
+    val dsn = root.resolve("dsn.txt")
+    def names = store.listImports("gtfs_").map(_.dbName)
+    val r1 = Import.importGtfsAtomically(spark,
+      mkCfg(root, TestFeed.writeTo(Files.createTempDirectory("fd1")), "p")
+        .copy(now = () => 1700000200L))
+    val first = r1.newImport.get.dbName
+    val feed2 = TestFeed.writeTo(Files.createTempDirectory("fd2"),
+      _.updated("feed_info.txt",
+        "feed_publisher_name,feed_publisher_url,feed_lang\nMetro2,https://m2,EN\n"))
+
+    // a directory where the commit writes its temp file fails the commit
+    val obstacle = store.metaDir.resolve(".latest_successful_imports.tmp")
+    Files.createDirectory(obstacle)
+    intercept[java.io.IOException] {
+      Import.importGtfsAtomically(spark,
+        mkCfg(root, feed2, "q").copy(now = () => 1700000300L))
+    }
+    assert(names == Seq(first), "the failed import published nothing")
+    assert(Files.readString(dsn).contains(s"dbname=$first "),
+      "clients stay routed to the previous import")
+
+    Files.delete(obstacle)
+    val r3 = Import.importGtfsAtomically(spark,
+      mkCfg(root, feed2, "r").copy(now = () => 1700000400L))
+    val third = r3.newImport.get.dbName
+    assert(names.headOption.contains(third))
+    assert(Files.readString(dsn).contains(s"dbname=$third "))
+    assert(r3.deletedDatabases.exists(_.startsWith("gtfs_1700000300_")),
+      "the failed import's database is reaped as an orphan")
+  }
+
   test("a real import runs at the feed-sized shuffle width and restores the caller's") {
     val key = "spark.sql.shuffle.partitions"
     val sessionWidth = spark.conf.get(key)

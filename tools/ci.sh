@@ -1,11 +1,11 @@
 #!/usr/bin/env bash
 # The round's single test entry point (r16 VERDICT #6): the scalatest
-# suite, the benchmark's compile and the end-to-end importer smoke in
-# one command that fails red on any of them. tools/smoke_importer.sh
-# runs its own `sbt -batch package` — sequencing it AFTER the test run
-# (instead of shelling it from inside a suite) avoids nested sbt
-# servers fighting over the project lock, and keeps `sbt test` itself
-# fast for inner-loop use.
+# suite, the benchmark's compile, its answer key and the end-to-end
+# importer smoke in one command that fails red on any of them.
+# tools/smoke_importer.sh runs its own `sbt -batch package` — sequencing
+# it AFTER the test run (instead of shelling it from inside a suite)
+# avoids nested sbt servers fighting over the project lock, and keeps
+# `sbt test` itself fast for inner-loop use.
 #
 # The suite runs with the same settings as ROADMAP.md's tier-1 verify
 # command: offline dependency resolution, one Spark core per CPU, and
@@ -37,6 +37,16 @@ else
 fi
 echo "[ci] perfbench compile"
 (cd perfbench && PERFBENCH_SPARK_JARS="$spark_jars" sbt --batch -Dsbt.log.noformat=true compile)
+
+# The benchmark's answer key checks every entity's row count after
+# cleaning, so a change in cleaning behaviour fails here, not only when
+# someone runs the benchmark.
+echo "[ci] perfbench answer key"
+result="$(python3 perfbench/run.py --workload import-churn --seed 1 --seconds 3 --trace 0 | tail -n 1)"
+if ! python3 -c 'import json, sys; r = json.loads(sys.argv[1]); sys.exit(not (r["correct"] is True and r["failed"] == 0))' "$result"; then
+  echo "[ci] FAIL: answer key: ${result:0:200}" >&2
+  exit 1
+fi
 
 echo "[ci] importer smoke"
 tools/smoke_importer.sh

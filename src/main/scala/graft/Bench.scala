@@ -213,20 +213,15 @@ object Bench {
     val nOkFirst = results.count(_._2.isDefined)
     val nOkSteady = results.count(_._3.isDefined)
     val json = s"""{"metric":"total","value":$total,"unit":"sec","n_ok":$nOk,"n_failed":${results.length - nOk},"n_ok_first":$nOkFirst,"n_ok_steady":$nOkSteady,"protocol":"steady=min of 2 post-warm runs; idle-wait before timing (r12); steady_runs=whole-suite pass totals, envelope=per-query min over all post-warm samples (r13)","queries":$qs,"steady":$st,"steady_total":$steadyTotal,"steady_runs":$runsJson,"pass_queries":$passesJson,"envelope":$env,"envelope_total":$envelopeTotal,"loadavg_start":"$loadStart","loadavg_end":"$loadEnd","window":"$window","failures":$fj,"sf":"$sfDir"}"""
-    // r19 (r18 VERDICT #2): the full diagnostic object above grew to
-    // ~16 KB at 101 queries (first + steady + per-pass + envelope maps)
-    // and the driver's ~4 KB stdout tail capture truncated it MID-LINE
-    // two rounds running (PERF_r17/r18: per_query {}, parsed null). The
-    // contract line printed to stdout is now a COMPACT (~3 KB) subset —
-    // same keys and same semantics as every parsed round (`value` /
-    // `queries` are the one-shot first-run numbers, as in BENCH_r01+;
-    // 3-decimal, i.e. millisecond, precision loses nothing at the ±40%
-    // host drift this box documents) — and the FULL diagnostic object
-    // goes only to the file artifact ($SPARK_GRAFT_BENCH_OUT). Nothing
-    // is measured differently; only where each representation lands.
-    def j3(v: Option[Double]): String = v.map(x => f"$x%.3f").getOrElse("null")
-    val qs3 = results.map(r => "\"" + r._1 + "\":" + j3(r._2)).mkString("{", ",", "}")
-    val compact = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","n_ok":$nOk,"n_failed":${results.length - nOk},"queries":$qs3,"steady_total":${f"$steadyTotal%.3f"},"envelope_total":${f"$envelopeTotal%.3f"},"loadavg_start":"$loadStart","loadavg_end":"$loadEnd","window":"$window","failures":$fj,"sf":"$sfDir"}"""
+    // The full diagnostic object above is ~16 KB at 101 queries (first +
+    // steady + per-pass + envelope maps), and a reader that keeps only
+    // the last few KB of stdout truncates it mid-line. So stdout gets a
+    // compact line of totals only (value, counts, steady and envelope
+    // totals, load stamps, window, failures, sf; ~300 chars without
+    // failures), and the full object, with every per-query map, goes to
+    // the file artifact ($SPARK_GRAFT_BENCH_OUT). Nothing is measured
+    // differently; only where each representation lands.
+    val compact = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","n_ok":$nOk,"n_failed":${results.length - nOk},"steady_total":${f"$steadyTotal%.3f"},"envelope_total":${f"$envelopeTotal%.3f"},"loadavg_start":"$loadStart","loadavg_end":"$loadEnd","window":"$window","failures":$fj,"sf":"$sfDir"}"""
     println(compact)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),

@@ -1,8 +1,14 @@
 package graft.gtfs
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.nio.file.{Files, Paths}
+import java.time.LocalDate
+import scala.jdk.CollectionConverters._
+import scala.util.{Try, Using}
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types._
 
 /** The consumer query surface gtfs-via-postgres generates into each
   * imported DB (SURVEY.md §2.7 V1-V8; flags at
@@ -339,19 +345,74 @@ object Views {
   /** Materialize V2 partitioned by service date: consumer queries are
     * almost always date-ranged (departure boards), so the layout makes
     * them partition-pruned directory scans — the "recommended" strategy
-    * of SURVEY.md §4. */
+    * of SURVEY.md §4.
+    *
+    * File order: each `svc_date=` directory holds its rows trip-major,
+    * sorted by (trip_id, shift, stop_sequence) and then by every other
+    * column, so the order is total and the same input writes the same
+    * bytes however the feed's frames are partitioned. The key extends
+    * past stop_sequence because a cleaned feed may still hold duplicate
+    * (trip_id, stop_sequence) rows. The partitioned write sorts by
+    * svc_date anyway; this only lengthens that sort's key. A trip-major
+    * order also compresses better than a station/time order. */
   def materializeArrivalsDepartures(feed: Feed, outPath: String,
-      defaultTz: String = "UTC"): Unit =
-    arrivalsDepartures(feed, defaultTz)
-      .repartition(col("svc_date"))
+      defaultTz: String = "UTC"): Unit = {
+    val ad = arrivalsDepartures(feed, defaultTz)
+    val key = Seq("svc_date", "trip_id", "shift", "stop_sequence")
+    ad.repartition(col("svc_date"))
+      .sortWithinPartitions((key ++ ad.columns.filterNot(key.contains)).map(col): _*)
       .write.mode("overwrite").partitionBy("svc_date").parquet(outPath)
+  }
 
-  /** Date-ranged read over the materialized V2 — the partition filter
-    * prunes at the directory level (PartitionFilters in the scan). */
+  /** The materialized V2 as [[arrivalsInRange]] reads it: the 13 data
+    * columns of [[arrivalsDepartures]] in its order, then the svc_date
+    * partition column, which a partitioned read always puts last. */
+  val arrivalsDeparturesSchema: StructType = StructType(Seq(
+    StructField("stop_id", StringType),
+    StructField("stop_name", StringType),
+    StructField("station_id", StringType),
+    StructField("trip_id", StringType),
+    StructField("route_id", StringType),
+    StructField("route_short_name", StringType),
+    StructField("route_type", IntegerType),
+    StructField("service_id", StringType),
+    StructField("stop_sequence", IntegerType),
+    StructField("shift", LongType),
+    StructField("t_arrival", TimestampType),
+    StructField("t_departure", TimestampType),
+    StructField("tz", StringType),
+    StructField("svc_date", DateType)))
+
+  /** Date-ranged read over the materialized V2 at `path`, for ISO dates
+    * `from` ≤ svc_date ≤ `to`. It opens only the `svc_date=` directories
+    * inside the range, found by one listing of `path`: a plain
+    * `read.parquet(path)` lists every service day of the import (~29 for
+    * a month's feed) before pruning to the one or two a board needs.
+    * The schema is declared, not inferred, so no parquet footer is read
+    * while the query is planned, and a drift between the writer and this
+    * schema fails a spec instead of a board. A range with no materialized
+    * day gives an empty frame of the same schema. The svc_date filter
+    * stays, so the scan still shows PartitionFilters on svc_date.
+    *
+    * Nothing is cached: each call lists the directory again, so a read
+    * never outlives the import's retention. */
   def arrivalsInRange(spark: SparkSession, path: String,
-      from: String, to: String): DataFrame =
-    spark.read.parquet(path)
-      .where(col("svc_date") >= lit(from) && col("svc_date") <= lit(to))
+      from: String, to: String): DataFrame = {
+    val (lo, hi) = (LocalDate.parse(from), LocalDate.parse(to))
+    val dayDirs = Using.resource(Files.list(Paths.get(path))) {
+      _.iterator().asScala.map(_.getFileName.toString).filter { name =>
+        name.startsWith("svc_date=") &&
+          Try(LocalDate.parse(name.stripPrefix("svc_date="))).toOption
+            .exists(d => !d.isBefore(lo) && !d.isAfter(hi))
+      }.map(name => s"$path/$name").toSeq
+    }
+    val days =
+      if (dayDirs.isEmpty)
+        spark.createDataFrame(java.util.List.of[Row](), arrivalsDeparturesSchema)
+      else spark.read.schema(arrivalsDeparturesSchema)
+        .option("basePath", path).parquet(dayDirs: _*)
+    days.where(col("svc_date") >= lit(from) && col("svc_date") <= lit(to))
+  }
 
   /** L4 --import-metadata analog: one-row metadata table. */
   def importMetadata(spark: SparkSession, feedDigest: String,

@@ -2,8 +2,9 @@ package graft.pipeline
 
 import java.nio.file.{Files, Path}
 import graft.SparkSpec
-import graft.gtfs.TestFeed
+import graft.gtfs.{TestFeed, Views}
 import graft.meta.MetaStore
+import org.apache.spark.sql.functions.{col, max, min}
 
 /** SURVEY.md §5.3 pipeline integration tests: import twice → second run
   * skips (P5); changed feed → new import; retention drops the oldest
@@ -108,6 +109,14 @@ class ImportPipelineSpec extends SparkSpec {
     assert(hasDatePartition, "expected svc_date= partition directories")
     val ad = spark.read.parquet(adDir.toString)
     assert(ad.count() > 0)
+    // the day-directory read over the feed's whole range is the same
+    // multiset of rows as a plain read of the directory
+    val range = ad.agg(min("svc_date"), max("svc_date")).head()
+    val ranged = Views.arrivalsInRange(spark, adDir.toString,
+      range.getDate(0).toString, range.getDate(1).toString)
+    val plain = ad.select(ranged.columns.map(col).toIndexedSeq: _*)
+    assert(ranged.count() == plain.count())
+    assert(ranged.exceptAll(plain).isEmpty && plain.exceptAll(ranged).isEmpty)
   }
 
   test("T1: second importer fails fast while the lock is held (NOWAIT)") {

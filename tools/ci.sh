@@ -39,14 +39,18 @@ echo "[ci] perfbench compile"
 (cd perfbench && PERFBENCH_SPARK_JARS="$spark_jars" sbt --batch -Dsbt.log.noformat=true compile)
 
 # The benchmark's answer key checks every entity's row count after
-# cleaning, so a change in cleaning behaviour fails here, not only when
-# someone runs the benchmark.
+# cleaning and every consumer read, so a change in cleaning behaviour or
+# in the read path fails here, not only when someone runs the benchmark.
+# Both workloads run: consumer-reads has the larger V2 (~2.4x).
 echo "[ci] perfbench answer key"
-result="$(python3 perfbench/run.py --workload import-churn --seed 1 --seconds 3 --trace 0 | tail -n 1)"
-if ! python3 -c 'import json, sys; r = json.loads(sys.argv[1]); sys.exit(not (r["correct"] is True and r["failed"] == 0))' "$result"; then
-  echo "[ci] FAIL: answer key: ${result:0:200}" >&2
-  exit 1
-fi
+for workload in import-churn consumer-reads; do
+  result="$(python3 perfbench/run.py --workload "$workload" --seed 1 --seconds 3 --trace 0 | tail -n 1)"
+  if ! python3 -c 'import json, sys; r = json.loads(sys.argv[1]); sys.exit(not (r["correct"] is True and r["failed"] == 0))' "$result"; then
+    echo "[ci] FAIL: answer key ($workload): ${result:0:200}" >&2
+    exit 1
+  fi
+  echo "[ci] answer key ok: $workload"
+done
 
 echo "[ci] importer smoke"
 tools/smoke_importer.sh

@@ -179,13 +179,13 @@ object Import {
       cfg.jdbcTarget.foreach(t =>
         graft.sinks.JdbcSink.loadFeedIntoSchema(feed, t, dbName))
       // L4: import metadata
-      Views.importMetadata(spark, feedDigest, importedAt, cfg.dbPrefix)
-        .write.mode("overwrite").parquet(dbPath.resolve("import_metadata").toString)
+      Views.parquetWriter(Views.importMetadata(spark, feedDigest, importedAt, cfg.dbPrefix))
+        .parquet(dbPath.resolve("import_metadata").toString)
       // materialized consumer views (gtfs-via-postgres materializes
       // service_days; arrivals_departures partitioned by service date
       // gives date-ranged departure boards partition pruning)
       if (cfg.materializeViews) {
-        Views.serviceDays(feed).write.mode("overwrite")
+        Views.parquetWriter(Views.serviceDays(feed))
           .parquet(dbPath.resolve("service_days").toString)
         Views.materializeArrivalsDepartures(feed,
           dbPath.resolve("arrivals_departures").toString)
@@ -526,7 +526,7 @@ object Import {
     * barrier analog (import.sh:131). */
   private def writeFeed(feed: Clean.Feed, dbPath: Path): Unit =
     feed.foreach { case (entity, df) =>
-      df.write.mode("overwrite").parquet(dbPath.resolve(entity).toString)
+      Views.parquetWriter(df).parquet(dbPath.resolve(entity).toString)
     }
 
   /** gtfsclean output parity: write the cleaned feed back as GTFS CSV

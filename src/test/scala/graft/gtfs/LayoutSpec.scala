@@ -6,12 +6,21 @@ import scala.util.Using
 
 import graft.SparkSpec
 import graft.pipeline.Import
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.column.Encoding
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.{ColumnChunkMetaData, CompressionCodecName, ParquetMetadata}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 
 /** Physical-layout strategies: the L3 clustered-stops index analog and
   * the partition-by-date V2 materialization — both must show directory-
   * level partition pruning (PartitionFilters) in the scan, not just a
-  * post-scan filter. */
+  * post-scan filter — and the import's parquet encodings, read from the
+  * file footers. */
 class LayoutSpec extends SparkSpec {
 
   implicit lazy val s: SparkSession = spark
@@ -111,5 +120,115 @@ class LayoutSpec extends SparkSpec {
     val (three, four) = (bytesByDay(3), bytesByDay(4))
     assert(three.nonEmpty && three.keySet == four.keySet)
     three.keys.toSeq.sorted.foreach(d => assert(three(d) == four(d), s"$d files differ"))
+  }
+
+  private def parquetFiles(dir: Path): Seq[Path] = Using.resource(Files.walk(dir)) {
+    _.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toSeq.sorted
+  }
+
+  private def footer(f: Path): ParquetMetadata = Using.resource(ParquetFileReader.open(
+    HadoopInputFile.fromPath(new HPath(f.toUri), spark.sparkContext.hadoopConfiguration)))(_.getFooter)
+
+  private def chunks(meta: ParquetMetadata): Seq[ColumnChunkMetaData] =
+    meta.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+
+  private def assertZstd(f: Path, meta: ParquetMetadata): Unit = {
+    assert(chunks(meta).nonEmpty, f)
+    chunks(meta).foreach(ch => assert(ch.getCodec == CompressionCodecName.ZSTD, s"$f ${ch.getPath}"))
+  }
+
+  private val timestampColumns = Seq("t_arrival", "t_departure")
+
+  /** TestFeed plus one 600-stop trip at distinct times: TestFeed's own
+    * day files are so small that a dictionary pays for its timestamps,
+    * where a real feed's mostly distinct ones fall back to the page
+    * encoding. */
+  private lazy val longTripFeedDir: Path = TestFeed.writeTo(
+    Files.createTempDirectory("feed-long"), fs => fs
+      .updated("trips.txt", fs("trips.txt") + "tlong,r1,svc1,\n")
+      .updated("stop_times.txt", fs("stop_times.txt") + (1 to 600).map { i =>
+        val t = 4 * 3600 + 37 * i
+        val hms = f"${t / 3600}%02d:${t / 60 % 60}%02d:${t % 60}%02d"
+        s"tlong,$hms,$hms,s${i % 3 + 1},$i\n"
+      }.mkString))
+
+  /** INT64 TIMESTAMP(MICROS, UTC) delta-encoded timestamps, zstd chunks. */
+  private def assertV2Layout(dayFile: Path): Unit = {
+    val meta = footer(dayFile)
+    val micros = LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.MICROS)
+    val schema = meta.getFileMetaData.getSchema
+    timestampColumns.foreach { c =>
+      val t = schema.getType(schema.getFieldIndex(c)).asPrimitiveType
+      assert(t.getPrimitiveTypeName == PrimitiveTypeName.INT64, s"$c in $dayFile")
+      assert(t.getLogicalTypeAnnotation == micros, s"$c in $dayFile")
+    }
+    assertZstd(dayFile, meta)
+    timestampColumns.foreach { c =>
+      val ts = chunks(meta).filter(_.getPath.toDotString == c)
+      assert(ts.nonEmpty && ts.forall(_.getEncodings.contains(Encoding.DELTA_BINARY_PACKED)),
+        s"$c encodings: ${ts.map(_.getEncodings)}")
+    }
+  }
+
+  test("an import writes V2 timestamps as delta-encoded INT64 micros, every file zstd") {
+    val root = Files.createTempDirectory("store-layout")
+    val r = Import.importGtfsAtomically(spark, Import.Config(
+      feedSource = longTripFeedDir,
+      storeRoot = root,
+      dbPrefix = "gtfs_",
+      tmpDir = root.resolve("tmp"),
+      cleanConfig = Clean.Config(enabled = false),
+      materializeViews = true,
+      now = () => 1700000900L))
+    val db = graft.meta.MetaStore(root.toString).databasePath(r.newImport.get.dbName)
+    assertV2Layout(parquetFiles(db.resolve("arrivals_departures")).head)
+    // an entity, service_days and import_metadata share the one writer
+    Seq("stop_times", "service_days", "import_metadata").foreach { t =>
+      val fs = parquetFiles(db.resolve(t))
+      assert(fs.nonEmpty, t)
+      fs.foreach(f => assertZstd(f, footer(f)))
+    }
+  }
+
+  test("V2 write restores the caller's parquet timestamp type, also when it throws") {
+    val key = "spark.sql.parquet.outputTimestampType"
+    def callerValue = spark.conf.getAll.get(key) // None: never set
+    val before = callerValue
+    val feed = Import.readFeed(spark, longTripFeedDir)
+    def write(out: String): Unit = Views.materializeArrivalsDepartures(feed, out)
+    val notADir = Files.createTempFile("regular", ".file").resolve("ad").toString
+    try {
+      spark.conf.set(key, "TIMESTAMP_MILLIS")
+      val out = Files.createTempDirectory("ad-conf")
+      write(out.toString)
+      assert(callerValue === Some("TIMESTAMP_MILLIS"))
+      assertV2Layout(parquetFiles(out).head) // the sentinel does not reach the file
+
+      spark.conf.unset(key)
+      write(Files.createTempDirectory("ad-conf-unset").toString)
+      assert(callerValue === None)
+
+      intercept[Exception](write(notADir))
+      assert(callerValue === None)
+      spark.conf.set(key, "TIMESTAMP_MILLIS")
+      intercept[Exception](write(notADir))
+      assert(callerValue === Some("TIMESTAMP_MILLIS"))
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("V2 read back from its files holds the view's instants, DST days included") {
+    // svc1 also runs on the spring-forward and fall-back Sundays of
+    // Europe/Berlin, the agency zone, so those days' instants are
+    // written and read back too
+    val feed = Import.readFeed(spark, TestFeed.writeTo(Files.createTempDirectory("feed-dst"),
+      fs => fs.updated("calendar_dates.txt",
+        fs("calendar_dates.txt") + "svc1,20240331,1\nsvc1,20241027,1\n")))
+    val view = Views.arrivalsDepartures(feed)
+    val out = Files.createTempDirectory("ad-dst").toString
+    Views.materializeArrivalsDepartures(feed, out)
+    val back = spark.read.parquet(out).select(view.columns.map(col).toIndexedSeq: _*)
+    assert(days(back).contains("2024-03-31") && days(back).contains("2024-10-27"))
+    assert(back.count() == view.count() && back.count() > 0)
+    assert(back.exceptAll(view).isEmpty && view.exceptAll(back).isEmpty)
   }
 }

@@ -6,7 +6,10 @@
 # end-to-end TWICE against the same file:// zip and asserts:
 #   run 1: a real import — "importSkipped": false, a newDb is named,
 #          and the DSN file points at it (K4)
+#          an external reader (DuckDB, via python3's duckdb module) opens the
+#          published V2 and types its timestamps as timestamptz
 #   run 2: the P5 digest short-circuit — "importSkipped": true, no new db
+# Both runs materialize the consumer views (GTFS_MATERIALIZE_VIEWS).
 # Fully offline (file:// URL; sbt resolves from the warm local cache).
 #
 # Usage: tools/smoke_importer.sh            (from the repo root)
@@ -36,6 +39,7 @@ run_import() {
   GTFS_STORE_ROOT="$store" \
   GTFS_TMP_DIR="$work/tmp" \
   GTFS_IMPORTER_DSN_FILE="$work/dsn.txt" \
+  GTFS_MATERIALIZE_VIEWS=true \
   bin/graft-importer 2>"$work/run$1.err" | tee "$work/run$1.out"
 }
 
@@ -48,6 +52,23 @@ grep -qE '"newDb": "gtfs_[a-z0-9_]+"' <<<"$out1" || {
 db="$(sed -E 's/.*"newDb": "([^"]+)".*/\1/' <<<"$out1")"
 grep -qF "$db" "$work/dsn.txt" || {
   echo "[smoke] FAIL: DSN file does not point at $db" >&2; exit 1; }
+
+echo "[smoke] DuckDB reads the published arrivals_departures"
+python3 - "$store/dbs/$db/arrivals_departures" <<'PY' || {
+import sys
+try:
+    import duckdb
+except ImportError:
+    sys.exit("[smoke] FAIL: python3 has no duckdb module; the external-reader check cannot run")
+glob = sys.argv[1] + "/*/*.parquet"
+rows, ts_type = duckdb.sql(
+    f"SELECT count(*), any_value(typeof(t_departure)) "
+    f"FROM read_parquet('{glob}', hive_partitioning = 1)").fetchone()
+print(f"[smoke] duckdb: {rows} rows, t_departure {ts_type}")
+if not (rows > 0 and ts_type == "TIMESTAMP WITH TIME ZONE"):
+    sys.exit(f"[smoke] FAIL: expected rows > 0 and TIMESTAMP WITH TIME ZONE, got {rows}, {ts_type}")
+PY
+  echo "[smoke] FAIL: DuckDB could not read the published V2 as expected" >&2; exit 1; }
 
 echo "[smoke] run 2 (expect the P5 digest short-circuit)"
 out2="$(run_import 2 | grep -F '"importSkipped"')"

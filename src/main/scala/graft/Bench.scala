@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.ops.JsonOut.q
 
 /** Benchmark main (driver contract). Runs every query in
   * `SparkEntry.queries` against $SPARK_GRAFT_SF_DIR and prints ONE JSON
@@ -55,45 +56,30 @@ object Bench {
     }
   }
 
+  /** The run's totals and stamps. Both outputs carry them: the compact
+    * stdout line the driver reads, and the tail of the file artifact.
+    * Every string goes through [[graft.ops.JsonOut.q]] (an sf dir or a
+    * loadavg read may carry any character), and numbers render with
+    * `Locale.ROOT` so a comma-decimal locale cannot break the line. */
+  private[graft] final case class Totals(value: Double, nOk: Int,
+      nFailed: Int, steadyTotal: Double, envelopeTotal: Double,
+      loadStart: String, loadEnd: String, window: String,
+      failures: Seq[String], sf: String) {
+    def stamps: String =
+      s""""loadavg_start":${q(loadStart)},"loadavg_end":${q(loadEnd)},""" +
+        s""""window":${q(window)},"failures":${failures.map(q).mkString("[", ",", "]")},""" +
+        s""""sf":${q(sf)}"""
+    def compactLine: String = {
+      def f3(d: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, d)
+      s"""{"metric":"total","value":${f3(value)},"unit":"sec","n_ok":$nOk,""" +
+        s""""n_failed":$nFailed,"steady_total":${f3(steadyTotal)},""" +
+        s""""envelope_total":${f3(envelopeTotal)},$stamps}"""
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle width sized to the input (r12 VERDICT #1): floor = cpus,
-    // so the sf0.1 bench shape is byte-identical to prior rounds; at
-    // sf10+ the width grows with the data and the fixed-width spill
-    // family (q22/q9/ppl_buckets) stays inside its per-task memory.
-    val parts = graft.ops.ShuffleWidth.forDir(sfDir, cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Round-13: whole-stage-codegen class cache sized to the SUITE,
-      // not Spark's default 100 entries. The 101-query suite compiles
-      // several codegen units per query, so one whole-suite pass cycles
-      // the default LRU many times over — every extra pass (steady_runs
-      // protocol) re-paid full Janino compilation per query. Measured
-      // A/B, same build, back-to-back (SCALE.md §r13-codegen-cache):
-      // at 100 entries pass totals climb MONOTONICALLY 57.4→90.5→127.8 s
-      // ("heap pressure" was the wrong r13 diagnosis — the JVM wasn't
-      // aging, its compile cache was thrashing); at 2048 a 5-pass run
-      // reads 54.7/55.6/79.3/68.7/50.4 s — pass 5 the FASTEST, the
-      // residual spread uniform across queries, i.e. virtualized-host
-      // noise the per-query min envelope exists to see through. First-
-      // run totals drop too (97.1→88.5 s): Warmup's precompiled shapes
-      // now survive to the late-alphabet queries instead of being
-      // evicted mid-pass. 2048 entries ≈ the suite's working set at
-      // ~50 KB/entry — noise on a 24 g heap, and the same knob a
-      // long-lived production SQL service (a Thrift server running a
-      // repeated query mix) raises for the same reason.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2048"))
-      // The lmScore model joins broadcast an AGGREGATED relation (c2 =
-      // corpus-wide bigram counts), so the broadcast future awaits a
-      // corpus-scale build job — at sf1000 that job alone exceeds the
-      // 300 s default await, which assumes the build side is a scan.
-      .config("spark.sql.broadcastTimeout", "3600")
-      .getOrCreate()
+    val spark = SparkEntry.sessionBuilder(sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
@@ -176,7 +162,7 @@ object Bench {
     val loadEnd = loadavg()
     def jnum(v: Option[Double]): String = v.map(_.toString).getOrElse("null")
     def jmap(f: ((String, Option[Double], Option[Double])) => Option[Double]): String =
-      results.map(r => "\"" + r._1 + "\":" + jnum(f(r))).mkString("{", ",", "}")
+      results.map(r => q(r._1) + ":" + jnum(f(r))).mkString("{", ",", "}")
     val qs = jmap(_._2)
     val st = jmap(_._3)
     // per-query min over ALL post-warm samples (pass-1 steady + extras)
@@ -184,19 +170,18 @@ object Bench {
       val samples = steady.toSeq ++ extras.flatMap(_.getOrElse(name, None))
       name -> (if (samples.isEmpty) None else Some(samples.min))
     }
-    val env = envelope.map { case (n, v) => "\"" + n + "\":" + jnum(v) }
+    val env = envelope.map { case (n, v) => q(n) + ":" + jnum(v) }
       .mkString("{", ",", "}")
     // per-extra-pass per-query samples (r13): lets a reader (and the
     // builder) see WHERE a drifting pass total goes — uniform
     // multiplicative drift is the host/JVM, per-query spikes are a leak
     val passesJson = extras.map { m =>
-      names.map { case (n, _) => "\"" + n + "\":" + jnum(m.getOrElse(n, None)) }
+      names.map { case (n, _) => q(n) + ":" + jnum(m.getOrElse(n, None)) }
         .mkString("{", ",", "}")
     }.mkString("[", ",", "]")
     val envelopeTotal = envelope.flatMap(_._2).sum
     val runTotals = results.flatMap(_._3).sum +: extras.map(_.values.flatten.sum)
     val runsJson = runTotals.map(_.toString).mkString("[", ",", "]")
-    val fj = failures.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.flatMap(_._2).sum
     val steadyTotal = results.flatMap(_._3).sum
     // n_ok/n_failed (r9 ADVICE): the totals sum only SUCCESSFUL
@@ -212,7 +197,9 @@ object Bench {
     val nOk = results.count(r => r._2.isDefined && r._3.isDefined)
     val nOkFirst = results.count(_._2.isDefined)
     val nOkSteady = results.count(_._3.isDefined)
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","n_ok":$nOk,"n_failed":${results.length - nOk},"n_ok_first":$nOkFirst,"n_ok_steady":$nOkSteady,"protocol":"steady=min of 2 post-warm runs; idle-wait before timing (r12); steady_runs=whole-suite pass totals, envelope=per-query min over all post-warm samples (r13)","queries":$qs,"steady":$st,"steady_total":$steadyTotal,"steady_runs":$runsJson,"pass_queries":$passesJson,"envelope":$env,"envelope_total":$envelopeTotal,"loadavg_start":"$loadStart","loadavg_end":"$loadEnd","window":"$window","failures":$fj,"sf":"$sfDir"}"""
+    val totals = Totals(total, nOk, results.length - nOk, steadyTotal,
+      envelopeTotal, loadStart, loadEnd, window, failures.sorted, sfDir)
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","n_ok":$nOk,"n_failed":${results.length - nOk},"n_ok_first":$nOkFirst,"n_ok_steady":$nOkSteady,"protocol":"steady=min of 2 post-warm runs; idle-wait before timing (r12); steady_runs=whole-suite pass totals, envelope=per-query min over all post-warm samples (r13)","queries":$qs,"steady":$st,"steady_total":$steadyTotal,"steady_runs":$runsJson,"pass_queries":$passesJson,"envelope":$env,"envelope_total":$envelopeTotal,${totals.stamps}}"""
     // The full diagnostic object above is ~16 KB at 101 queries (first +
     // steady + per-pass + envelope maps), and a reader that keeps only
     // the last few KB of stdout truncates it mid-line. So stdout gets a
@@ -221,8 +208,7 @@ object Bench {
     // failures), and the full object, with every per-query map, goes to
     // the file artifact ($SPARK_GRAFT_BENCH_OUT). Nothing is measured
     // differently; only where each representation lands.
-    val compact = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","n_ok":$nOk,"n_failed":${results.length - nOk},"steady_total":${f"$steadyTotal%.3f"},"envelope_total":${f"$envelopeTotal%.3f"},"loadavg_start":"$loadStart","loadavg_end":"$loadEnd","window":"$window","failures":$fj,"sf":"$sfDir"}"""
-    println(compact)
+    println(totals.compactLine)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints `.explain("formatted")` for the named
   * queries (or all) against a testdata dir. Used to check the plans we
   * want: filters pushed into scans (PushedFilters), pruned ReadSchema,
@@ -21,13 +19,12 @@ object Explain {
     // the name list AFTER stripping flags, then fall back on empty.
     val named = args.drop(1).toSeq.filterNot(_ == "-run")
     val names = if (named.nonEmpty) named else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the bench's session, so the audited plans carry the bench's
+    // shuffle width and settings
+    val spark = SparkEntry.sessionBuilder(sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    println(s"[explain] sfDir=$sfDir cpus=${SparkEntry.cpus} " +
+      s"shuffle.partitions=${spark.conf.get("spark.sql.shuffle.partitions")}")
     names.foreach { n =>
       println(s"\n===================== $n =====================")
       val df = SparkEntry.queries(n)(spark, sfDir)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Timing probe: runs each named query `iters` times (noop sink, like
   * Bench) and prints every iteration's seconds. Iteration 1 minus the
   * steady-state tail isolates the fixed planning/codegen cost from the
@@ -14,25 +12,12 @@ object Probe {
     val sfDir = args(0)
     val iters = args(1).toInt
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle width defaults to the engine's own input-sized derivation
-    // (r12 VERDICT #1 — ops.ShuffleWidth, same as Bench/Verify); the
-    // env override remains for width EXPERIMENTS, i.e. separating "plan
-    // grows super-linearly" from "fixed width spills at this input".
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS",
-      graft.ops.ShuffleWidth.forDir(sfDir, cpus.toInt).toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // codegen class cache sized to the query suite (see Bench.scala);
-      // env-overridable so Probe can reproduce the 100-vs-2048 A/B
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2048"))
-      // broadcast build side may be a corpus-scale aggregation (lmScore
-      // c2 model) — the 300 s default await assumes a scan (see Bench)
-      .config("spark.sql.broadcastTimeout", "3600")
+    // The suite session (SparkEntry.sessionBuilder, input-sized width);
+    // the env override remains for width EXPERIMENTS, i.e. separating
+    // "plan grows super-linearly" from "fixed width spills at this input".
+    val widthOverride = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTS").filter(_.nonEmpty)
+    val builder = SparkEntry.sessionBuilder(sfDir)
+    widthOverride.foreach(builder.config("spark.sql.shuffle.partitions", _))
     // Optional durability-mode probe (r12 VERDICT #4): route every
     // ops.Checkpoints.pin through a RELIABLE checkpoint to this dir
     // (local disk standing in for HDFS) to measure the snapshot-write
@@ -50,8 +35,9 @@ object Probe {
     }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    println(s"[probe] sfDir=$sfDir cpus=$cpus shuffle.partitions=$parts" +
-      (if (sys.env.contains("SPARK_GRAFT_SHUFFLE_PARTS")) " (env override)" else " (derived)"))
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    println(s"[probe] sfDir=$sfDir cpus=${SparkEntry.cpus} shuffle.partitions=$parts" +
+      (if (widthOverride.isDefined) " (env override)" else " (derived)"))
     // Same untimed warmup as Bench, so probe numbers are comparable to
     // bench rows (first-iteration cost = plan + any shape NOT warmed).
     Warmup.run(spark, sfDir)
@@ -59,7 +45,7 @@ object Probe {
     // per-iteration DELTA separates "the iteration was slow because the
     // collector ran" from "the data path was slow" (the r14 sf1000
     // scorer spread 704→1194 s was attributed to GC churn by shape;
-    // the heap-sizing rule in SCALE.md is validated by this number).
+    // r15's heap-sizing rule was validated by this number).
     // per-bean baselines: a bean's FIRST non-negative reading is its
     // baseline (delta 0), so neither a -1→real transition nor a bean
     // appearing mid-run can charge its lifetime collection time to one

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.ops.JsonOut.q
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -22,6 +22,17 @@ object Verify {
     }
   } catch { case _: Exception => "unknown" }
 
+  /** Machine-readable protocol stamp (r13 VERDICT #7): the knobs that
+    * shaped this run, so CORRECTNESS artifacts are self-describing —
+    * the compare tools merge these fields into their `_meta`. Strings go
+    * through [[graft.ops.JsonOut.q]]: an sf dir may carry any character. */
+  private[graft] def runMeta(sfDir: String, cpus: Int, shufflePartitions: Int,
+      sparkVersion: String, buildCommit: String): String =
+    s"""{"sf_dir": ${q(sfDir)}, "cpus": $cpus, "shuffle_partitions": $shufflePartitions,
+       | "codegen_cache_max_entries": ${SparkEntry.CodegenCacheEntries},
+       | "spark_version": ${q(sparkVersion)},
+       | "build_commit": ${q(buildCommit)}}""".stripMargin
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // Optional third arg: regex over query names, for fast local iteration
@@ -29,33 +40,14 @@ object Verify {
     val nameFilter = args.lift(2).map(_.r)
     def selected(name: String): Boolean =
       nameFilter.forall(_.findFirstIn(name).isDefined)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Input-sized shuffle width (r12 VERDICT #1) — same derivation as
-    // Bench, so correctness runs exercise the width the bench uses.
-    val parts = graft.ops.ShuffleWidth.forDir(sfDir, cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // codegen class cache sized to the query suite (see Bench.scala);
-      // env-overridable so knob experiments reproduce through any entry
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2048"))
-      // broadcast build side may be a corpus-scale aggregation (lmScore
-      // c2 model) — the 300 s default await assumes a scan (see Bench)
-      .config("spark.sql.broadcastTimeout", "3600")
-      .getOrCreate()
+    // the bench's own session, so correctness runs exercise the width
+    // and settings the bench uses
+    val spark = SparkEntry.sessionBuilder(sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Machine-readable protocol stamp (r13 VERDICT #7): the knobs that
-    // shaped this run, so CORRECTNESS artifacts are self-describing —
-    // the compare tools merge these fields into their `_meta`.
-    Files.writeString(Paths.get(s"$outDir/run_meta.json"),
-      s"""{"sf_dir": "$sfDir", "cpus": $cpus, "shuffle_partitions": $parts,
-         | "codegen_cache_max_entries": ${spark.conf.get("spark.sql.codegen.cache.maxEntries")},
-         | "spark_version": "${spark.version}",
-         | "build_commit": "$buildCommit"}""".stripMargin)
+    Files.writeString(Paths.get(s"$outDir/run_meta.json"), runMeta(sfDir,
+      SparkEntry.cpus, spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      spark.version, buildCommit))
     SparkEntry.queries.foreach { case (name, fn) =>
       if (selected(name)) {
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -71,7 +63,6 @@ object Verify {
     // JSON string escape (shared ops.JsonOut) — a tab or CR in
     // builder-authored SQL would otherwise make the driver's json.load
     // fail and silently zero the round's correctness.
-    import graft.ops.JsonOut.q
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => selected(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

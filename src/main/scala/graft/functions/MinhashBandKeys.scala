@@ -27,10 +27,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * expressions are 8 separate lambdas with no cross-lambda
   * subexpression elimination — so each doc pays 8× the shingle-string
   * builds and 8× the sha256 digests, plus a hex render + substring +
-  * radix-16 conv per (shingle, slice). The sf10 StreamBench coarse
+  * radix-16 conv per (shingle, slice). The r16 sf10 streaming LSH
   * replay spent ~85% of its wall in exactly this projection at
-  * 2-files-per-trigger parallelism (decomposition probe, SCALE.md
-  * round-16), which r15 had mis-attributed to the stateful operator.
+  * 2-files-per-trigger parallelism (measured by an A/B of the two
+  * banding forms), which r15 had mis-attributed to the stateful
+  * operator.
   * Same cure as [[NgramHashesExpr]] (the measured precedent): one fused
   * pass per document — each shingle's bytes are streamed into ONE
   * SHA-256 digest (no joined-string alloc, no hex round trip), the
@@ -40,8 +41,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   *
   * Bit-identity with the composable form (asserted element-wise on
   * real corpus text + adversarial edges by MinhashBandKeysSpec) is
-  * what keeps the r15 STREAMBENCH pair hashes comparable across
-  * rounds and the DuckDB-portable chunk semantics of
+  * what keeps the stream-vs-batch exactness replay on one shared
+  * projection and the DuckDB-portable chunk semantics of
   * [[Sha256ChunksExpr]] intact. One deliberate difference: a NULL
   * words array returns NULL (standard null-safe unary semantics, the
   * row vanishes at the downstream posexplode) where the composable

@@ -8,9 +8,10 @@ package graft.ops
   * at sf10; llm_ppl_buckets 12× at sf100) was per-task spill at a
   * fixed 32-partition shuffle width — not a plan defect. Re-running at
   * 64/128 partitions collapsed both the times and the iteration spread
-  * (SCALE.md §r12). A cluster deployment sizes width to the data as a
-  * matter of course; this makes the engine do it unprompted, from the
-  * same signal a cluster uses: the input footprint.
+  * (SCALE.md's r12 notes, in its git history). A cluster deployment
+  * sizes width to the data as a matter of course; this makes the
+  * engine do it unprompted, from the same signal a cluster uses: the
+  * input footprint.
   *
   * Formula: one shuffle partition per [[TargetBytes]] = 32 MiB of
   * on-disk columnar input. Parquet compresses this corpus ~4×, so a
@@ -35,8 +36,9 @@ package graft.ops
   * exactly the width the r12 probe proved cures q22/q9 — and the
   * sf100 mixed dir (2.38 GB) → 96.
   *
-  * Callers: the Bench/Verify/Probe/StreamBench session builders, which
-  * fix the width for the whole session, and the atomic importer
+  * Callers: `SparkEntry.sessionBuilder`, the one session of the suite
+  * mains (Bench, Verify, Probe, Explain), which fixes the width for the
+  * whole session, and the atomic importer
   * (`pipeline.Import.importGtfsAtomically`), which sizes it from the
   * staged feed (the zip copy or the feed dir) and scopes it to ONE
   * import: set after the digest-skip decision, restored to the
@@ -139,7 +141,9 @@ private[graft] object ShuffleWidth {
     * the WORKLOAD, invariant to directory composition, so same-table
     * replays derive the same width in any round. Each table resolves
     * as `dir/<table>.parquet` (file or directory — `inputBytes`
-    * handles both; a missing table contributes 0). */
+    * handles both; a missing table contributes 0). No main calls it
+    * any more: the documents-only streaming replay it was written for
+    * is retired, and the suite mains size to the whole dir. */
   def forTables(dir: String, tables: Seq[String], cpus: Int): Int =
     derive(tables.map(t =>
       inputBytes(new org.apache.hadoop.fs.Path(dir, s"$t.parquet").toString)).sum,

@@ -2688,7 +2688,7 @@ object LlmOps {
     * window, no per-cell collection. The pair space is Σ cell², so the
     * caller owns the density knob: production pairs this with
     * `ops.Ivf.build(embeddings, k ∝ N)` (bounded cell occupancy keeps
-    * the pair space linear in the corpus — measured in SCALE.md's sf1
+    * the pair space linear in the corpus — measured in the r10 sf1
     * sweep); the `llm_semantic_dedup` query wires
     * [[graft.ops.CosineLsh.signKey]] cells instead — a deterministic
     * sign-sketch hash grid whose cell count derives from count(*) in
@@ -2761,7 +2761,7 @@ object LlmOps {
     * stream, and the ONLY corpus shuffle left is the one-row-per-doc
     * partial-aggregate output into groupBy(doc_id) — this is what
     * turned the sf1000 scorer from a 160 GB shuffle-disk wall (r13)
-    * into a runnable plan (SCALE.md round-14 table). The broadcast
+    * into a runnable plan (r14). The broadcast
     * argument holds until a tokenizer change makes the model a
     * function of corpus size (byte-level BPE merges, URL/hash
     * tokens, …) — c2 crosses that line an order of magnitude before

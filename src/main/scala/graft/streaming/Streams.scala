@@ -311,21 +311,19 @@ object Streams {
   final case class NearDupCandidate(docId: Long, anchorId: Long, band: Int)
 
   /** The banded (doc_id, ts, band, bucket) projection the LSH candidate
-    * stream runs on — extracted so a batch replay can derive the EXACT
-    * expected anchor-star pairs on the identical band keys (StreamBench
-    * r15: exactness at sf1/sf10 without collecting either side).
+    * stream runs on, public so a batch replay can derive the exact
+    * expected anchor-star pairs on the identical band keys.
     *
     * The banding is ONE fused codegen'd pass per document
     * ([[graft.functions.MinhashBandKeysExpr]]): each shingle's bytes →
     * one sha256 → running 32-bit-chunk minima → xxhash64 band keys,
     * bit-identical to the composable higher-order-function form it
-    * replaced ([[bandedDocsComposable]], kept for the identity spec and
-    * the decomposition probe). The composable form's 8 interpreted
-    * `transform` lambdas — each rebuilding every shingle string AND
-    * re-digesting it, no cross-lambda subexpression elimination — were
-    * ~85% of the r15 StreamBench LSH wall (SCALE.md round-16
-    * decomposition), previously mis-attributed to the stateful
-    * operator. */
+    * replaced ([[bandedDocsComposable]], kept for the identity spec).
+    * The composable form's 8 interpreted `transform` lambdas — each
+    * rebuilding every shingle string AND re-digesting it, no
+    * cross-lambda subexpression elimination — were ~85% of the r15 sf10
+    * streaming LSH replay's wall, previously mis-attributed to the
+    * stateful operator. */
   def bandedDocs(docs: DataFrame, nBands: Int = 4, rowsPerBand: Int = 2,
       shingleLen: Int = 3): DataFrame = {
     require(nBands * rowsPerBand <= 8,
@@ -347,8 +345,7 @@ object Streams {
     * interpreted `transform` lambdas over `sha2` hex strings. Retained
     * (not used by any operator) as the executable spec the fused
     * expression is asserted bit-identical against
-    * (MinhashBandKeysSpec) and as the A/B arm of the StreamBench
-    * `lshdecomp` probe. */
+    * (MinhashBandKeysSpec). */
   private[graft] def bandedDocsComposable(docs: DataFrame, nBands: Int = 4,
       rowsPerBand: Int = 2, shingleLen: Int = 3): DataFrame = {
     require(nBands * rowsPerBand <= 8,
@@ -390,22 +387,10 @@ object Streams {
     *
     * Minhash parity with the batch op: 8 independent 32-bit minhash
     * slices from ONE sha256 per shingle, nBands×rowsPerBand ≤ 8,
-    * computed by [[bandedDocs]] (shared with the batch exactness
-    * replay in StreamBench).
-    *
-    * `docParallelism > 0` repartitions the document stream to that
-    * width BEFORE the banding projection. A file-source micro-batch
-    * inherits the batch's file split count (StreamBench's coarse
-    * replay: 2 files ⇒ 2-way), which serializes the banding work on an
-    * idle 32-core box; a wide source (Kafka with many partitions, many
-    * small drop files) doesn't need it, so 0 = leave the source
-    * partitioning alone. The shuffle it adds moves raw docs once;
-    * banding output (4 rows/doc) is shuffled by the stateful operator
-    * either way. */
+    * computed by [[bandedDocs]]. */
   def nearDupCandidateStream(docs: DataFrame, nBands: Int = 4,
       rowsPerBand: Int = 2, shingleLen: Int = 3, horizonSecs: Long = 3600,
-      timeout: GroupStateTimeout = GroupStateTimeout.EventTimeTimeout,
-      docParallelism: Int = 0)
+      timeout: GroupStateTimeout = GroupStateTimeout.EventTimeTimeout)
       : Dataset[NearDupCandidate] = {
     require(nBands * rowsPerBand <= 8,
       "one sha256 yields 8 independent 32-bit minhash slices")
@@ -415,27 +400,14 @@ object Streams {
     require(timeout == GroupStateTimeout.EventTimeTimeout ||
         timeout == GroupStateTimeout.NoTimeout,
       s"nearDupCandidateStream evicts on event time: pass EventTimeTimeout or NoTimeout, not $timeout")
-    val spread = if (docParallelism > 0) docs.repartition(docParallelism) else docs
-    nearDupCandidatesFromBanded(
-      bandedDocs(spread, nBands, rowsPerBand, shingleLen),
-      horizonSecs, timeout)
-  }
-
-  /** The anchor-election state operator over an already-banded
-    * projection — split out so the StreamBench `lshdecomp` probe can
-    * run the IDENTICAL stateful tail over either banding formulation
-    * and attribute wall time between the two stages. */
-  private[graft] def nearDupCandidatesFromBanded(banded: DataFrame,
-      horizonSecs: Long, timeout: GroupStateTimeout)
-      : Dataset[NearDupCandidate] = {
-    import banded.sparkSession.implicits._
+    import docs.sparkSession.implicits._
     val useTimers = timeout != GroupStateTimeout.NoTimeout
     // the event-time column travels as the ORIGINAL watermark-tagged
     // attribute: EventTimeTimeout requires a tagged column in the
     // stateful operator's child output, and its late-row filter reads
     // it (a unix_micros projection strips the tag — the analyzer
-    // rejects the query; found by the lshdecomp smoke)
-    banded
+    // rejects the query)
+    bandedDocs(docs, nBands, rowsPerBand, shingleLen)
       .withWatermark("ts", s"$horizonSecs seconds")
       .select(col("doc_id").as("docId"), col("ts"), col("band"), col("bucket"))
       .as[BandRow]

@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 /** The fused [[MinhashBandKeysExpr]] must be BIT-IDENTICAL to the
   * composable higher-order-function formulation it replaced
   * (`Streams.bandedDocsComposable`) — that identity is what keeps the
-  * STREAMBENCH pair hashes comparable across rounds and the
   * stream-vs-batch exactness replay on one shared projection. Asserted
   * on real corpus text plus the adversarial edges of `split`/`slice`/
   * `array_join` semantics (short docs, empty tokens from repeated

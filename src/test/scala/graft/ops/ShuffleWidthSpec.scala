@@ -20,14 +20,13 @@ class ShuffleWidthSpec extends AnyFunSuite {
 
   test("sf10-sized input derives the width the r12 probe proved cures the spill family") {
     // sf10 dir = 1.80 GB → ceil(1800/32) = 57 raw → one extra wave = 64,
-    // exactly the width that collapsed q22_pagerank's spread (SCALE.md §r12)
+    // exactly the width that collapsed q22_pagerank's spread (r12)
     assert(ShuffleWidth.derive(inputBytes = 1800 * MiB, cpus = 32) === 64)
     // sf100 mixed dir = 2.38 GB → raw 75 → 96
     assert(ShuffleWidth.derive(inputBytes = 2380 * MiB, cpus = 32) === 96)
-    // sf1000 documents dir ≈ 7470 MiB = 7.30 GiB (SCALE.md's "7.3 GB"
-    // means GiB; the measured footprint is re-stated in bytes in the
-    // r14 SCALE.md section) → raw 234 → 256, the width the r13
-    // fourth-decade sweep ran at (SCALE.md §r13-fourth-decade)
+    // sf1000 documents dir ≈ 7470 MiB = 7.30 GiB → raw 234 → 256, the
+    // width the r13 fourth-decade sweep ran at (SCALE.md's r13/r14
+    // notes, in its git history)
     assert(ShuffleWidth.derive(inputBytes = 7470 * MiB, cpus = 32) === 256)
   }
 

@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # The round's single test entry point (r16 VERDICT #6): the scalatest
-# suite, the benchmark's compile, its answer key and the end-to-end
-# importer smoke in one command that fails red on any of them.
+# suite, the benchmark's compile, its answer key, the DuckDB oracle over
+# the query suite and the end-to-end importer smoke in one command that
+# fails red on any of them.
 # tools/smoke_importer.sh runs its own `sbt -batch package` — sequencing
 # it AFTER the test run (instead of shelling it from inside a suite)
 # avoids nested sbt servers fighting over the project lock, and keeps
@@ -51,6 +52,23 @@ for workload in import-churn consumer-reads; do
   fi
   echo "[ci] answer key ok: $workload"
 done
+
+# The DuckDB oracle: every suite query's Spark answer against an
+# independent SQL answer, under the session Bench and Verify share
+# (SparkEntry.sessionBuilder), so a change to that session or to a query
+# fails here. Red unless the compare reports 0 fail.
+echo "[ci] oracle"
+oracle_out="$(mktemp -d "${TMPDIR:-/tmp}/graft-oracle.XXXXXX")"
+trap 'rm -rf "$oracle_out"' EXIT
+sbt --batch -Dsbt.log.noformat=true "runMain graft.Verify /root/testdata/sf0.01 $oracle_out"
+compare="$(python3 tools/verify_local.py /root/testdata/sf0.01 "$oracle_out" 2>&1)" || true
+summary="$(grep -E '^[0-9]+ pass / [0-9]+ fail' <<<"$compare" || true)"
+if ! grep -qE '^[1-9][0-9]* pass / 0 fail' <<<"$summary"; then
+  grep -E '^FAIL|Error' <<<"$compare" >&2 || true
+  echo "[ci] FAIL: oracle: ${summary:-${compare: -300}}" >&2
+  exit 1
+fi
+echo "[ci] oracle ok: $summary"
 
 echo "[ci] importer smoke"
 tools/smoke_importer.sh

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.queries.QueryDef
 import graft.{queries => q}
 
@@ -95,7 +94,7 @@ object SparkEntry {
     defs.map { case (k, v) => k -> v.fn }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    defs.collect { case (k, v) if v.oracle.isDefined => k -> v.oracle.get }
+    defs.map { case (k, v) => k -> v.oracle }
 }

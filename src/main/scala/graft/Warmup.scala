@@ -220,7 +220,6 @@ object Warmup {
       // the bench row still carried ~3 s of first-compile cost from the
       // shapes around it (probe: 5.95 s first vs 2.2 s steady)
       locally {
-        implicit val s: SparkSession = spark
         import spark.implicits._
         val cal = Seq((0L, "2024-01-01"), (1L, "2024-01-02"),
           (2L, "2024-01-03"), (3L, "2024-01-04"))

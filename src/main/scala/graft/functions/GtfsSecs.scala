@@ -76,8 +76,6 @@ object GtfsSecs {
     java.lang.Long.valueOf(hours * 3600 + mins * 60 + secs)
   }
 
-  private val info = new ExpressionInfo(classOf[GtfsSecsExpr].getName, "gtfs_secs")
-
   /** Register `gtfs_secs` into an existing session (tests, notebooks). */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

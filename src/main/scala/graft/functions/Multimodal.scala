@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 
 /** Multimodal column plumbing (builder brief): image/audio/video travel
   * as opaque BINARY columns with typed metadata; decode / feature

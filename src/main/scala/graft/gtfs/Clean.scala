@@ -58,9 +58,9 @@ object Clean {
     ("remove-red-agencies", _ => removeRedundantAgencies),
     ("remove-red-stops", _ => removeRedundantStops),
     ("remove-red-routes", _ => removeRedundantRoutes),
-    ("remove-red-services", s => removeRedundantServices(_)(s)),
-    ("minimize-services", s => minimizeServices(_)(s)),
-    ("minimize-stoptimes", s => minimizeStopTimes(_)(s)),
+    ("remove-red-services", _ => removeRedundantServices),
+    ("minimize-services", _ => minimizeServices),
+    ("minimize-stoptimes", _ => minimizeStopTimes),
     ("min-shapes", s => minShapes(_, MinShapesEpsilonDeg)(s)),
     ("remove-red-shapes", _ => removeRedundantShapes),
     ("remove-red-trips", _ => removeRedundantTrips),
@@ -220,7 +220,7 @@ object Clean {
 
   /** Canonical per-service date-set signature: ordered distinct dates
     * digest. Groups are bounded by the service's calendar span. */
-  private def serviceSignatures(feed: Feed)(implicit spark: SparkSession): DataFrame = {
+  private def serviceSignatures(feed: Feed): DataFrame = {
     val days = Views.serviceDays(feed)
     days.select(col("service_id"), date_format(col("svc_date"), "yyyyMMdd").as("d"))
       .distinct()
@@ -229,7 +229,7 @@ object Clean {
   }
 
   // C13 --remove-red-services (import.sh:89-91): identical date sets.
-  def removeRedundantServices(feed: Feed)(implicit spark: SparkSession): Feed = {
+  def removeRedundantServices(feed: Feed): Feed = {
     if (!feed.contains("calendar") && !feed.contains("calendar_dates")) return feed
     val (remap, keep) = canonicalIds(serviceSignatures(feed), "service_id", "dsig")
     var f = feed
@@ -353,7 +353,7 @@ object Clean {
   // never needs exception_type=2 rows and expansion is exactly
   // preserved (property-tested in CleanSpec). Per-service fan-out is
   // bounded by the calendar span.
-  def minimizeServices(feed: Feed)(implicit spark: SparkSession): Feed = {
+  def minimizeServices(feed: Feed): Feed = {
     if (!feed.contains("calendar") && !feed.contains("calendar_dates")) return feed
     val days = Views.serviceDays(feed).select("service_id", "svc_date")
     // The whole weekly-mask decision folds into ONE aggregation over
@@ -439,7 +439,7 @@ object Clean {
   // time shift that repeat at constant headway fold into
   // frequencies.txt (exact_times=1): islands of constant first-departure
   // delta per (route, service, relative-stop-sequence signature).
-  def minimizeStopTimes(feed: Feed)(implicit spark: SparkSession): Feed =
+  def minimizeStopTimes(feed: Feed): Feed =
     (feed.get("trips"), feed.get("stop_times")) match {
       case (Some(trips), Some(st)) =>
         val keyed = trips.join(relativeStopTimeSignatures(st), Seq("trip_id"))

@@ -44,14 +44,10 @@ object GtfsTime {
       concat(date_format(serviceDate, "yyyy-MM-dd"), lit(" 12:00:00")), tz) -
       expr("INTERVAL 12 HOURS")
 
-  /** Absolute UTC event timestamp for a GTFS time on a service day in an
-    * agency timezone: anchor + seconds of real time (GTFS times are
-    * whole seconds, so epoch-long arithmetic is exact). */
-  def absoluteUtc(serviceDate: Column, gtfsTime: Column, tz: Column): Column =
-    (anchorUtc(serviceDate, tz).cast("long") + toSeconds(gtfsTime)).cast("timestamp")
-
-  /** Epoch seconds variant (BIGINT), convenient for oracle-checkable
-    * outputs. */
-  def absoluteEpoch(serviceDate: Column, gtfsTime: Column, tz: Column): Column =
-    absoluteUtc(serviceDate, gtfsTime, tz).cast("long")
+  /** Absolute UTC event timestamp of `secs` seconds since the noon−12h
+    * anchor of a service day in an agency timezone: anchor + seconds of
+    * real time (GTFS times are whole seconds, so epoch-long arithmetic
+    * is exact). V2 computes both `t_arrival` and `t_departure` here. */
+  def absoluteUtc(serviceDate: Column, secs: Column, tz: Column): Column =
+    (anchorUtc(serviceDate, tz).cast("long") + secs).cast("timestamp")
 }

@@ -168,12 +168,10 @@ object Views {
       .join(days, Seq("service_id"))
       .withColumn("arr_s", GtfsTime.toSeconds(col("arrival_time")) + col("shift"))
       .withColumn("dep_s", GtfsTime.toSeconds(col("departure_time")) + col("shift"))
-      .withColumn("t_arrival",
-        (GtfsTime.anchorUtc(col("svc_date"), coalesce(col("tz"), lit(defaultTz)))
-          .cast("long") + col("arr_s")).cast("timestamp"))
-      .withColumn("t_departure",
-        (GtfsTime.anchorUtc(col("svc_date"), coalesce(col("tz"), lit(defaultTz)))
-          .cast("long") + col("dep_s")).cast("timestamp"))
+      .withColumn("t_arrival", GtfsTime.absoluteUtc(col("svc_date"), col("arr_s"),
+        coalesce(col("tz"), lit(defaultTz))))
+      .withColumn("t_departure", GtfsTime.absoluteUtc(col("svc_date"), col("dep_s"),
+        coalesce(col("tz"), lit(defaultTz))))
 
     val withStops = feed.get("stops") match {
       case Some(stops) => events.join(

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Small-files compaction — the table-maintenance pass every long-lived

@@ -1,12 +1,15 @@
 package graft.pipeline
 
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.Locale
 import java.util.zip.ZipFile
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.gtfs.{Clean, Schemas, Views}
@@ -501,13 +504,32 @@ object Import {
     }
   }
 
-  /** S3: read every present entity with its declared schema. */
+  /** S3: read every present entity with its declared schema. A spec
+    * column named twice in a header fails the read: Spark's CSV reader
+    * would rename both copies (`stop_name1`, `stop_name4`; it compares
+    * header names case-insensitively) and [[Schemas.readEntity]] would
+    * then fill the column with NULLs. */
   def readFeed(spark: SparkSession, dir: Path): Clean.Feed =
-    Schemas.all.keys.toSeq.sorted.flatMap { entity =>
+    Schemas.all.toSeq.sortBy(_._1).flatMap { case (entity, schema) =>
       val f = dir.resolve(s"$entity.txt")
-      if (Files.exists(f)) Some(entity -> Schemas.readEntity(spark, dir.toString, entity))
-      else None
+      if (Files.exists(f)) {
+        val names = csvHeader(f).map(_.toLowerCase(Locale.ROOT))
+        schema.fieldNames.find(c => names.count(_ == c) > 1).foreach { c =>
+          throw new IllegalArgumentException(
+            s"$f: column $c appears more than once in the header")
+        }
+        Some(entity -> Schemas.readEntity(spark, dir.toString, entity))
+      } else None
     }.toMap
+
+  /** The header fields of a CSV file, read on the driver: its first
+    * line, BOM stripped, each field's enclosing quotes removed. */
+  private def csvHeader(f: Path): Seq[String] =
+    Using.resource(new BufferedReader(
+        new InputStreamReader(Files.newInputStream(f), StandardCharsets.UTF_8))) { in =>
+      Option(in.readLine()).getOrElse("").stripPrefix("\uFEFF").split(",", -1).toSeq
+        .map(_.stripPrefix("\"").stripSuffix("\""))
+    }
 
   /** L2 --lower-case-lang-codes (import.sh:125). */
   def lowerLangCodes(feed: Clean.Feed): Clean.Feed =

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -345,7 +344,7 @@ object Clean {
       val cal = Tables.orders(s, d).where(col("o_orderkey") % 20 < 4)
         .select(col("o_orderkey").as("service_id"),
           col("o_orderdate").cast("date").as("sd"))
-      c8Summary(cal)(s)
+      c8Summary(cal)
     },
 
     // C13 --remove-red-services: services with identical *date sets*
@@ -510,8 +509,8 @@ object Clean {
     * input — round-6's warmup covered minimizeServices alone and the
     * bench row still carried ~3 s of first-compile cost from the
     * shapes around it. */
-  private[graft] def c8Summary(cal: org.apache.spark.sql.DataFrame)(
-      implicit spark: SparkSession): org.apache.spark.sql.DataFrame = {
+  private[graft] def c8Summary(cal: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
     val variant = col("service_id") % 20
     val off = datediff(col("dt"), col("sd"))
     val dow = expr("weekday(dt)")

@@ -2,8 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One driver-checkable query: a Spark plan plus (usually) an equivalent
-  * ANSI SQL string the driver runs in DuckDB over the same parquet tables.
+/** One oracle-checked query: a Spark plan plus an equivalent ANSI SQL
+  * string `tools/verify_local.py` runs in DuckDB over the same parquet
+  * tables.
   *
   * Conventions that make the hash-compare sound (see SURVEY.md §5):
   *   - every computed column is aliased identically in Spark and SQL;
@@ -19,16 +20,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 final case class QueryDef(
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
+    oracle: String,
     doc: String = "")
 
 object QueryDef {
   def apply(doc: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(fn, Some(oracle.stripMargin.trim), doc)
-
-  /** Non-SQL-expressible operator → driver records a rows-only check. */
-  def noOracle(doc: String)(
-      fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(fn, None, doc)
+    QueryDef(fn, oracle.stripMargin.trim, doc)
 }

@@ -17,6 +17,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Scale: all state is keyed (user/window), bounded by the watermark;
   * file-source batches use the same schema'd readers as batch (S3).
+  *
+  * Callers: only [[lmScoreStream]] (and the [[lmScoreStreamJoin]] path
+  * it delegates to) serves a suite query, `stream_lm_score`. Every other
+  * operator here is reached only by StreamsSpec, StreamBatchEquivSpec
+  * and MinhashBandKeysSpec.
   */
 object Streams {
 
@@ -318,7 +323,7 @@ object Streams {
     * ([[graft.functions.MinhashBandKeysExpr]]): each shingle's bytes →
     * one sha256 → running 32-bit-chunk minima → xxhash64 band keys,
     * bit-identical to the composable higher-order-function form it
-    * replaced ([[bandedDocsComposable]], kept for the identity spec).
+    * replaced (MinhashBandKeysSpec keeps that form as its reference).
     * The composable form's 8 interpreted `transform` lambdas — each
     * rebuilding every shingle string AND re-digesting it, no
     * cross-lambda subexpression elimination — were ~85% of the r15 sf10
@@ -339,33 +344,6 @@ object Streams {
     docs.where(col("text").isNotNull)
       .select(col("doc_id"), col("ts"),
         posexplode(keys).as(Seq("band", "bucket")))
-  }
-
-  /** The pre-r16 composable formulation of [[bandedDocs]] — 8
-    * interpreted `transform` lambdas over `sha2` hex strings. Retained
-    * (not used by any operator) as the executable spec the fused
-    * expression is asserted bit-identical against
-    * (MinhashBandKeysSpec). */
-  private[graft] def bandedDocsComposable(docs: DataFrame, nBands: Int = 4,
-      rowsPerBand: Int = 2, shingleLen: Int = 3): DataFrame = {
-    require(nBands * rowsPerBand <= 8,
-      "one sha256 yields 8 independent 32-bit minhash slices")
-    val words = split(col("text"), " ")
-    val shingles = transform(
-      sequence(lit(0), greatest(size(words) - shingleLen, lit(0))),
-      i => array_join(slice(words, i + 1, lit(shingleLen)), " "))
-    val mh = (0 until nBands * rowsPerBand).map { j =>
-      array_min(transform(shingles, s =>
-        conv(substring(sha2(s, 256), j * 8 + 1, 8), 16, 10).cast("long")))
-    }
-    val bandKeys = (0 until nBands).map { b =>
-      xxhash64((lit(b) +: (0 until rowsPerBand)
-        .map(r => mh(b * rowsPerBand + r))): _*)
-    }
-    // same NULL-text filter as the fused form (see bandedDocs)
-    docs.where(col("text").isNotNull)
-      .select(col("doc_id"), col("ts"),
-        posexplode(array(bandKeys: _*)).as(Seq("band", "bucket")))
   }
 
   /** Streaming MinHash-LSH near-dup candidates — the ingest-time flavor

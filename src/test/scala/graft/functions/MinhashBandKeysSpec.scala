@@ -2,12 +2,12 @@ package graft.functions
 
 import graft.SparkSpec
 import graft.streaming.Streams
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The fused [[MinhashBandKeysExpr]] must be BIT-IDENTICAL to the
   * composable higher-order-function formulation it replaced
-  * (`Streams.bandedDocsComposable`) — that identity is what keeps the
+  * ([[composable]] below) — that identity is what keeps the
   * stream-vs-batch exactness replay on one shared projection. Asserted
   * on real corpus text plus the adversarial edges of `split`/`slice`/
   * `array_join` semantics (short docs, empty tokens from repeated
@@ -22,17 +22,37 @@ class MinhashBandKeysSpec extends SparkSpec {
       .withColumn("ts", timestamp_seconds(lit(1704067200L) + col("doc_id")))
   }
 
+  /** The composable formulation [[Streams.bandedDocs]] replaced: 8
+    * interpreted `transform` lambdas over `sha2` hex strings, with the
+    * same NULL-text filter as the fused form. */
+  private def composable(docs: DataFrame, nBands: Int, rowsPerBand: Int,
+      shingleLen: Int): DataFrame = {
+    val words = split(col("text"), " ")
+    val shingles = transform(
+      sequence(lit(0), greatest(size(words) - shingleLen, lit(0))),
+      i => array_join(slice(words, i + 1, lit(shingleLen)), " "))
+    val mh = (0 until nBands * rowsPerBand).map { j =>
+      array_min(transform(shingles, s =>
+        conv(substring(sha2(s, 256), j * 8 + 1, 8), 16, 10).cast("long")))
+    }
+    val bandKeys = (0 until nBands).map { b =>
+      xxhash64((lit(b) +: (0 until rowsPerBand)
+        .map(r => mh(b * rowsPerBand + r))): _*)
+    }
+    docs.where(col("text").isNotNull)
+      .select(col("doc_id"), col("ts"),
+        posexplode(array(bandKeys: _*)).as(Seq("band", "bucket")))
+  }
+
   private def assertIdentical(docs: DataFrame, nBands: Int = 4,
       rowsPerBand: Int = 2, shingleLen: Int = 3): Unit = {
     val fused = Streams.bandedDocs(docs, nBands, rowsPerBand, shingleLen)
       .select("doc_id", "band", "bucket")
-    val composable = Streams
-      .bandedDocsComposable(docs, nBands, rowsPerBand, shingleLen)
+    val comp = composable(docs, nBands, rowsPerBand, shingleLen)
       .select("doc_id", "band", "bucket")
-    assert(fused.exceptAll(composable).isEmpty &&
-        composable.exceptAll(fused).isEmpty,
+    assert(fused.exceptAll(comp).isEmpty && comp.exceptAll(fused).isEmpty,
       s"fused != composable:\n fused ${fused.collect().toSeq.sortBy(_.getLong(0))}" +
-        s"\n comp  ${composable.collect().toSeq.sortBy(_.getLong(0))}")
+        s"\n comp  ${comp.collect().toSeq.sortBy(_.getLong(0))}")
   }
 
   test("bit-identical to the composable form on real corpus text") {

@@ -26,7 +26,8 @@ class GtfsTimeSpec extends SparkSpec {
 
   private def epochOf(date: String, t: String, tz: String): Long =
     Seq((date, t)).toDF("d", "t")
-      .select(GtfsTime.absoluteEpoch(to_date(col("d")), col("t"), lit(tz)))
+      .select(GtfsTime.absoluteUtc(to_date(col("d")), GtfsTime.toSeconds(col("t")), lit(tz))
+        .cast("long"))
       .as[Long].head()
 
   test("normal day: anchor is local midnight (Berlin CET = UTC+1)") {

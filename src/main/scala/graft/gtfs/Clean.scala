@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.ops.Checkpoints.PinSyntax
+
 /** gtfsclean's cleaning transforms (SURVEY.md §2.4 C1-C19), as
   * DataFrame → DataFrame programs over a [[Clean.Feed]]. The reference
   * hard-codes gtfsclean's flags (import.sh:44-111), so [[Clean.stages]]
@@ -15,6 +17,11 @@ import org.apache.spark.sql.expressions.Window
   * signatures only see per-trip / per-shape groups (bounded by feed
   * geometry, not feed size); orphan cascades are left-semi joins in
   * dependency order. All shuffles key on the natural entity ids.
+  *
+  * Materialization: one [[barrier]] per stage, or per segment of
+  * row-local stages (the third field of [[Clean.stages]]), and inside a
+  * stage every derived table that two or more outputs read is pinned
+  * once (`.pin()`), so it is computed once rather than once per reader.
   */
 object Clean {
 
@@ -32,45 +39,58 @@ object Clean {
 
   private val MinShapesEpsilonDeg = 1e-5
 
-  /** Lineage barrier between pipeline stages. Each cleaning stage
-    * re-references several entities' plans; composed lazily, the
-    * Catalyst plan is a TREE, so 14 stages of cross-entity joins expand
-    * exponentially and analysis alone becomes the bottleneck (observed:
-    * minutes of planner CPU on a toy feed). A lazy localCheckpoint
-    * truncates the logical plan after every stage — the Spark analog of
-    * the reference's `sponge` materialization barrier
-    * (/root/reference/import.sh:131) — bounding plan depth to one stage
-    * and computing each stage once (the checkpointed RDD is shared by
-    * all downstream references). On a multi-tenant cluster set
-    * `spark.graft.checkpointDir` and [[graft.ops.Checkpoints.pin]]
-    * switches every barrier to a reliable `checkpoint` (HDFS-backed) —
-    * same structure, executor-loss-safe. */
+  /** Lineage barrier after a stage, or after a segment of stages. Each
+    * cleaning stage re-references several entities' plans; composed
+    * lazily, the Catalyst plan is a TREE, so 14 stages of cross-entity
+    * joins expand exponentially and analysis alone becomes the
+    * bottleneck (observed: minutes of planner CPU on a toy feed). A lazy
+    * localCheckpoint of every entity truncates the logical plan — the
+    * Spark analog of the reference's one `sponge` materialization
+    * barrier (import.sh:131) — bounding plan depth to one segment and
+    * computing each entity once for all downstream references.
+    *
+    * A barrier pins each entity in its own execution, so it cannot share
+    * a table that several entities of one stage derive from: inside a
+    * stage, such a table (a merge's canonical ids, C9's trip windows,
+    * C10's surviving trips) is pinned once with the same lazy
+    * [[graft.ops.Checkpoints.pin]] and read by every output. Those pins
+    * have no release path of their own, and neither do the barrier's:
+    * both are localCheckpoint RDDs that Spark's ContextCleaner drops once
+    * the feed reading them is unreachable. On a multi-tenant cluster set
+    * `spark.graft.checkpointDir` and every pin becomes a reliable
+    * `checkpoint` (HDFS-backed) — same structure, executor-loss-safe. */
   private def barrier(feed: Feed): Feed =
-    feed.map { case (n, df) => n -> graft.ops.Checkpoints.pin(df) }
+    feed.map { case (n, df) => n -> df.pin() }
 
   /** The stages in the reference's order (import.sh:44-100): each
-    * stage's name in the clean log (C18) and its transform. */
-  val stages: Seq[(String, SparkSession => Feed => Feed)] = Seq(
-    ("keep-spec-columns", _ => keepSpecColumns),
-    ("default-on-errs", _ => defaultOnErrs),
-    ("drop-errs", _ => dropErrs),
-    ("check-null-coords", _ => checkNullCoords),
-    ("remove-red-agencies", _ => removeRedundantAgencies),
-    ("remove-red-stops", _ => removeRedundantStops),
-    ("remove-red-routes", _ => removeRedundantRoutes),
-    ("remove-red-services", _ => removeRedundantServices),
-    ("minimize-services", _ => minimizeServices),
-    ("minimize-stoptimes", _ => minimizeStopTimes),
-    ("min-shapes", s => minShapes(_, MinShapesEpsilonDeg)(s)),
-    ("remove-red-shapes", _ => removeRedundantShapes),
-    ("remove-red-trips", _ => removeRedundantTrips),
-    ("delete-orphans", _ => deleteOrphans))
+    * stage's name in the clean log (C18), its transform, and whether a
+    * [[barrier]] follows it. C5, C2, C3 and C4 only project and filter
+    * each entity on its own, so they share the one barrier after C4. */
+  val stages: Seq[(String, SparkSession => Feed => Feed, Boolean)] = Seq(
+    ("keep-spec-columns", _ => keepSpecColumns, false),
+    ("default-on-errs", _ => defaultOnErrs, false),
+    ("drop-errs", _ => dropErrs, false),
+    ("check-null-coords", _ => checkNullCoords, true),
+    ("remove-red-agencies", _ => removeRedundantAgencies, true),
+    ("remove-red-stops", _ => removeRedundantStops, true),
+    ("remove-red-routes", _ => removeRedundantRoutes, true),
+    ("remove-red-services", _ => removeRedundantServices, true),
+    ("minimize-services", _ => minimizeServices, true),
+    ("minimize-stoptimes", _ => minimizeStopTimes, true),
+    ("min-shapes", s => minShapes(_, MinShapesEpsilonDeg)(s), true),
+    ("remove-red-shapes", _ => removeRedundantShapes, true),
+    ("remove-red-trips", _ => removeRedundantTrips, true),
+    ("delete-orphans", _ => deleteOrphans, true))
 
-  /** Run every stage in order, with a [[barrier]] after each; with
-    * cleaning disabled the feed passes through untouched. */
+  /** Run every stage in order, each followed by its [[barrier]] if the
+    * table places one there; with cleaning disabled the feed passes
+    * through untouched. */
   def apply(feed: Feed, cfg: Config = Config())(implicit spark: SparkSession): Feed =
     if (!cfg.enabled) feed // C17 bypass (import.sh:38)
-    else stages.foldLeft(feed) { case (f, (_, stage)) => barrier(stage(spark)(f)) }
+    else stages.foldLeft(feed) { case (f, (_, stage, barrierAfter)) =>
+      val out = stage(spark)(f)
+      if (barrierAfter) barrier(out) else out
+    }
 
   // C5 --keep-additional-fields=off: project to spec columns only.
   def keepSpecColumns(feed: Feed): Feed =
@@ -142,7 +162,7 @@ object Clean {
       : (DataFrame, DataFrame) = {
     val w = Window.partitionBy(attrs.map(c =>
       coalesce(col(c).cast("string"), lit("\u2400null"))): _*)
-    val withCanon = df.withColumn("_canonical", min(col(id)).over(w))
+    val withCanon = df.withColumn("_canonical", min(col(id)).over(w)).pin()
     val remap = withCanon.select(col(id), col("_canonical").as("canonical"))
     val deduped = withCanon.where(col(id) === col("_canonical")).drop("_canonical")
     (deduped, remap)
@@ -161,7 +181,7 @@ object Clean {
   private def canonicalIds(sigs: DataFrame, id: String, sig: String)
       : (DataFrame, DataFrame) = {
     val remap = sigs.withColumn("canonical", min(id).over(Window.partitionBy(sig)))
-      .select(col(id), col("canonical"))
+      .select(col(id), col("canonical")).pin()
     (remap, remap.where(col(id) === col("canonical")).select(id))
   }
 
@@ -454,6 +474,7 @@ object Clean {
               col("delta") <= 0, 1).otherwise(0))
           .withColumn("run_id", sum("boundary").over(
             wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+          .pin()
         // Fold runs of >= 3 equally-spaced trips (2+ equal gaps). A run's
         // rows carry the gap to their predecessor, so the run's first
         // TRIP is the row immediately before the run's first gap row —
@@ -468,6 +489,7 @@ object Clean {
           .groupBy(runKey.map(col): _*)
           .agg(count(lit(1)).as("n_gaps"), min("delta").as("headway_secs"))
           .where(col("n_gaps") >= 2)
+          .pin()
         val prevOfRun = withDelta
           .withColumn("next_run", lead("run_id", 1).over(wOrd))
         val members = withDelta.join(foldable.select(runKey.map(col): _*), runKey)
@@ -493,6 +515,7 @@ object Clean {
           .withColumn("keep_trip", first("trip_id").over(
             wFold.orderBy("t0", "trip_id")
               .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+          .pin()
         val freqRows = exemplars
           .join(foldable, runKey)
           .groupBy(col("keep_trip").as("trip_id"))
@@ -503,7 +526,7 @@ object Clean {
             min("headway_secs").cast("int").as("headway_secs"),
             lit(1).as("exact_times"))
         val dropTrips = exemplars.where(col("trip_id") =!= col("keep_trip"))
-          .select("trip_id").distinct()
+          .select("trip_id").distinct().pin()
         val newTrips = trips.join(dropTrips, Seq("trip_id"), "left_anti")
         val newSt = st.join(dropTrips, Seq("trip_id"), "left_anti")
         val newFreq = feed.get("frequencies") match {
@@ -518,6 +541,8 @@ object Clean {
   // C10 --delete-orphans (import.sh:80-82): one pass of left-semi joins
   // in the order of GTFS's reference graph. A later step drops only rows
   // that no surviving row references, so the result is a fixed point.
+  // Each table that later steps read is pinned where it is final for
+  // this pass: trips twice, stop_times once.
   def deleteOrphans(feed: Feed): Feed = {
     var f = feed
     // trips must reference existing routes and services
@@ -530,7 +555,7 @@ object Clean {
         .reduceOption(_ unionByName _).map(_.distinct())
       serviceIds.foreach(s =>
         t = t.join(s, Seq("service_id"), "left_semi"))
-      f = f.updated("trips", t)
+      f = f.updated("trips", t.pin())
     }
     // stop_times must reference existing trips and stops
     for (st <- f.get("stop_times")) {
@@ -539,12 +564,12 @@ object Clean {
         s = s.join(t.select("trip_id"), Seq("trip_id"), "left_semi"))
       f.get("stops").foreach(stp =>
         s = s.join(stp.select("stop_id"), Seq("stop_id"), "left_semi"))
-      f = f.updated("stop_times", s)
+      f = f.updated("stop_times", s.pin())
     }
     // trips without any stop_times are dead
     for (trips <- f.get("trips"); st <- f.get("stop_times"))
       f = f.updated("trips",
-        trips.join(st.select("trip_id").distinct(), Seq("trip_id"), "left_semi"))
+        trips.join(st.select("trip_id").distinct(), Seq("trip_id"), "left_semi").pin())
     // frequencies referencing dropped trips
     for (fr <- f.get("frequencies"); trips <- f.get("trips"))
       f = f.updated("frequencies",

@@ -120,18 +120,30 @@ object Schemas {
     "shapes" -> shapes, "transfers" -> transfers, "feed_info" -> feedInfo,
     "translations" -> translations)
 
-  /** S3: schema'd CSV scan of one entity file. GTFS files may contain
-    * any subset of the spec columns in any order, so columns are mapped
-    * BY HEADER NAME (a positional `.schema(...)` read silently
-    * misassigns columns — found by CleanSpec). Values are typed via
-    * try_cast: unparseable cells become NULL for the C2/C3 machinery to
-    * default or drop (PERMISSIVE, the C1 --fix-zip analog) instead of
-    * failing the scan under ANSI mode. Non-spec columns are not read
-    * (C5 --keep-additional-fields=off). */
-  def readEntity(spark: SparkSession, dir: String, entity: String): DataFrame = {
+  /** S3: schema'd CSV scan of one entity file, given its header fields
+    * as read on the driver. GTFS files may contain any subset of the spec
+    * columns in any order, so the scan's schema comes from `header`: one
+    * STRING column per header field, in header order, so Spark runs no
+    * schema-inference job. A field named exactly like a spec column keeps
+    * that name; every other field (an extra column, an empty field, a
+    * case variant such as `Stop_Name`) is named `_c<i>` by its position,
+    * so the names are unique case-insensitively, as Spark requires, even
+    * when the header repeats one. The caller rejects a header that names
+    * a spec column twice. Values are typed via try_cast: unparseable
+    * cells become NULL for the C2/C3 machinery to default or drop
+    * (PERMISSIVE, the C1 --fix-zip analog) instead of failing the scan
+    * under ANSI mode. Non-spec columns are not read (C5
+    * --keep-additional-fields=off). */
+  def readEntity(spark: SparkSession, dir: String, entity: String,
+      header: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.{expr, lit}
     val schema = all(entity)
+    val specNames = schema.fieldNames.toSet
+    val names = header.zipWithIndex.map { case (h, i) =>
+      if (specNames.contains(h)) h else s"_c$i"
+    }
     val raw = spark.read
+      .schema(StructType(names.map(StructField(_, StringType))))
       .option("header", "true")
       .option("mode", "PERMISSIVE")
       // RFC-4180: quoted fields may contain embedded newlines (stop_name,
@@ -144,7 +156,7 @@ object Schemas {
       .option("escape", "\"")
       .csv(s"$dir/$entity.txt")
     val spec = schema.fields.map { f =>
-      if (raw.columns.contains(f.name))
+      if (names.contains(f.name))
         expr(s"try_cast(`${f.name}` AS ${f.dataType.sql})").as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }

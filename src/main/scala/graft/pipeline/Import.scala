@@ -9,6 +9,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 import scala.util.control.NonFatal
 
+import com.univocity.parsers.csv.{CsvParser, CsvParserSettings}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -463,7 +464,7 @@ object Import {
       s"feed_digest\t$digest", s"imported_at\t$importedAt",
       s"cleaning_enabled\t$enabled",
       s"entities\t${feed.keys.toSeq.sorted.mkString(",")}") ++
-      Clean.stages.map { case (n, _) => s"stage\t$n\t${if (enabled) "on" else "off"}" }
+      Clean.stages.map { case (n, _, _) => s"stage\t$n\t${if (enabled) "on" else "off"}" }
     Files.write(dbPath.resolve("clean-log.txt"), lines.asJava)
   }
 
@@ -504,32 +505,55 @@ object Import {
     }
   }
 
-  /** S3: read every present entity with its declared schema. A spec
-    * column named twice in a header fails the read: Spark's CSV reader
-    * would rename both copies (`stop_name1`, `stop_name4`; it compares
-    * header names case-insensitively) and [[Schemas.readEntity]] would
-    * then fill the column with NULLs. */
+  /** S3: read every present entity with its declared schema. Each
+    * file's header is parsed here, on the driver, and becomes the scan's
+    * schema ([[Schemas.readEntity]]), so the read runs no Spark job.
+    *
+    * GTFS field names are case-sensitive: a header field that differs
+    * from a spec column only in case (`Stop_Name`) is not that column, so
+    * the spec column (`stop_name`) reads as NULL, with no error. A spec
+    * column named twice fails the read, naming file and column, also
+    * when the two copies differ only in case (`stop_name,Stop_Name`):
+    * which copy the producer meant is ambiguous. */
   def readFeed(spark: SparkSession, dir: Path): Clean.Feed =
     Schemas.all.toSeq.sortBy(_._1).flatMap { case (entity, schema) =>
       val f = dir.resolve(s"$entity.txt")
       if (Files.exists(f)) {
-        val names = csvHeader(f).map(_.toLowerCase(Locale.ROOT))
+        val header = csvHeader(f)
+        val names = header.map(_.toLowerCase(Locale.ROOT))
         schema.fieldNames.find(c => names.count(_ == c) > 1).foreach { c =>
           throw new IllegalArgumentException(
             s"$f: column $c appears more than once in the header")
         }
-        Some(entity -> Schemas.readEntity(spark, dir.toString, entity))
+        Some(entity -> Schemas.readEntity(spark, dir.toString, entity, header))
       } else None
     }.toMap
 
-  /** The header fields of a CSV file, read on the driver: its first
-    * line, BOM stripped, each field's enclosing quotes removed. */
-  private def csvHeader(f: Path): Seq[String] =
+  /** The header fields of a CSV file: its first record, parsed with the
+    * quote and escape (`"`) the scan uses and the BOM stripped; an empty
+    * field reads as "". An empty file has one empty field. The parser
+    * settings follow Spark's CSV reader defaults, so the header has as
+    * many fields as the scan's rows. */
+  private def csvHeader(f: Path): Seq[String] = {
+    val settings = new CsvParserSettings()
+    settings.getFormat.setDelimiter(',')
+    settings.getFormat.setQuote('"')
+    settings.getFormat.setQuoteEscape('"')
+    settings.getFormat.setComment('\u0000')
+    settings.setIgnoreLeadingWhitespaces(false)
+    settings.setIgnoreTrailingWhitespaces(false)
+    settings.setMaxCharsPerColumn(-1)
+    settings.setLineSeparatorDetectionEnabled(true)
     Using.resource(new BufferedReader(
         new InputStreamReader(Files.newInputStream(f), StandardCharsets.UTF_8))) { in =>
-      Option(in.readLine()).getOrElse("").stripPrefix("\uFEFF").split(",", -1).toSeq
-        .map(_.stripPrefix("\"").stripSuffix("\""))
+      in.mark(1)
+      if (in.read() != '\uFEFF') in.reset()
+      val parser = new CsvParser(settings)
+      parser.beginParsing(in)
+      try Option(parser.parseNext()).fold(Seq(""))(_.toSeq.map(Option(_).getOrElse("")))
+      finally parser.stopParsing()
     }
+  }
 
   /** L2 --lower-case-lang-codes (import.sh:125). */
   def lowerLangCodes(feed: Clean.Feed): Clean.Feed =
@@ -548,8 +572,23 @@ object Import {
     * barrier analog (import.sh:131). */
   private def writeFeed(feed: Clean.Feed, dbPath: Path): Unit =
     feed.foreach { case (entity, df) =>
-      Views.parquetWriter(df).parquet(dbPath.resolve(entity).toString)
+      // Each file in key order, then by the other columns: a file's rows
+      // do not depend on how the cleaning plans happened to interleave
+      // them, and runs of equal values compress well (one trip's
+      // stop_times together).
+      val key = WriteKeys.getOrElse(entity, df.columns.take(1).toSeq)
+      val order = key ++ df.columns.filterNot(key.contains)
+      Views.parquetWriter(df.sortWithinPartitions(order.map(col): _*))
+        .parquet(dbPath.resolve(entity).toString)
     }
+
+  /** The key [[writeFeed]] orders an entity's files by; an entity not
+    * named here is ordered by its first column. */
+  private val WriteKeys: Map[String, Seq[String]] = Map(
+    "stop_times" -> Seq("trip_id", "stop_sequence"),
+    "shapes" -> Seq("shape_id", "shape_pt_sequence"),
+    "calendar_dates" -> Seq("service_id", "date"),
+    "frequencies" -> Seq("trip_id", "start_time"))
 
   /** gtfsclean output parity: write the cleaned feed back as GTFS CSV
     * files (`<entity>.txt`), one per entity — the `tidied.gtfs`

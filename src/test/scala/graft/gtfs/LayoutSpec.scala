@@ -190,6 +190,25 @@ class LayoutSpec extends SparkSpec {
     }
   }
 
+  test("an import writes each stop_times file in (trip_id, stop_sequence) order") {
+    val root = Files.createTempDirectory("store-order")
+    val r = Import.importGtfsAtomically(spark, Import.Config(
+      feedSource = longTripFeedDir,
+      storeRoot = root,
+      dbPrefix = "gtfs_",
+      tmpDir = root.resolve("tmp"),
+      now = () => 1700000950L))
+    val db = graft.meta.MetaStore(root.toString).databasePath(r.newImport.get.dbName)
+    val files = parquetFiles(db.resolve("stop_times"))
+    assert(files.nonEmpty)
+    files.foreach { f =>
+      // one small file is one split, read back in file order
+      val keys = spark.read.parquet(f.toString).select("trip_id", "stop_sequence")
+        .as[(String, Int)].collect().toSeq
+      assert(keys.nonEmpty && keys == keys.sorted, s"$f is not in key order")
+    }
+  }
+
   test("V2 write restores the caller's parquet timestamp type, also when it throws") {
     val key = "spark.sql.parquet.outputTimestampType"
     def callerValue = spark.conf.getAll.get(key) // None: never set

@@ -65,6 +65,30 @@ class MalformedFeedSpec extends SparkSpec {
     assert(stops.map(_.getAs[String]("stop_name")).toSeq == Seq("Nord"))
   }
 
+  test("a header with a quoted comma and an empty field before the spec columns maps every spec column") {
+    val dir = Files.createTempDirectory("feed-quoted-header")
+    Files.writeString(dir.resolve("stops.txt"),
+      "\"x,note\",,stop_id,stop_name,stop_lat,stop_lon\n" +
+        "\"a,b\",z,s1,Nord,52.5,13.25\n" +
+        ",,s2,Sued,52.625,13.5\n")
+    val rows = Import.readFeed(spark, dir)("stops").orderBy("stop_id").collect()
+    assert(rows.map(r => (r.getAs[String]("stop_id"), r.getAs[String]("stop_name"),
+      r.getAs[Double]("stop_lat"), r.getAs[Double]("stop_lon"))).toSeq ==
+      Seq(("s1", "Nord", 52.5, 13.25), ("s2", "Sued", 52.625, 13.5)))
+  }
+
+  test("GTFS field names are case-sensitive: a Stop_Name header reads stop_name as NULL, with no error") {
+    val dir = Files.createTempDirectory("feed-case")
+    Files.writeString(dir.resolve("stops.txt"),
+      "stop_id,Stop_Name,stop_lat,stop_lon\ns1,Nord,52.5,13.25\n")
+    val rows = Import.readFeed(spark, dir)("stops").collect()
+    assert(rows.length == 1)
+    val s1 = rows(0)
+    assert(s1.getAs[String]("stop_id") == "s1")
+    assert(s1.isNullAt(s1.fieldIndex("stop_name")))
+    assert(s1.getAs[Double]("stop_lat") == 52.5 && s1.getAs[Double]("stop_lon") == 13.25)
+  }
+
   /** A small clean feed: one route, two trips with different stop
     * patterns (so no stage merges or folds them), five stop times, and
     * svc1 on Mon–Fri 2024-03-04..08 plus Saturday 2024-03-09. */

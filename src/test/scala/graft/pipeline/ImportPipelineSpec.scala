@@ -30,6 +30,14 @@ class ImportPipelineSpec extends SparkSpec {
       cleanConfig = graft.gtfs.Clean.Config(enabled = clean),
       dsnFilePath = Some(root.resolve("dsn.txt")))
 
+  /** The most Spark jobs one cleaned TestFeed import with views may run.
+    * Measured once each cleaning stage computed its shared tables once
+    * and the typed read stopped inferring headers, it was 105 in 12 of
+    * 14 runs and 106 in 2 (152 before). The count is not exactly
+    * repeatable between runs, so the budget allows two jobs above the
+    * highest count seen. */
+  private val ImportJobBudget = 108
+
   test("import → skip-if-unchanged → changed feed → retention of newest 2") {
     val root = Files.createTempDirectory("store")
     val feed1 = TestFeed.writeTo(Files.createTempDirectory("f1"))
@@ -117,6 +125,50 @@ class ImportPipelineSpec extends SparkSpec {
     val plain = ad.select(ranged.columns.map(col).toIndexedSeq: _*)
     assert(ranged.count() == plain.count())
     assert(ranged.exceptAll(plain).isEmpty && plain.exceptAll(ranged).isEmpty)
+  }
+
+  /** `body`'s result and the number of Spark jobs it started. Its jobs
+    * carry a local property that the listener matches; a sentinel job
+    * run after `body` is delivered after all of them, so the count is
+    * complete once the listener has seen it. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobTag"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).orNull match {
+          case `tag` => jobs.incrementAndGet()
+          case t if t == s"$tag-end" => done.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      val out = try body finally sc.setLocalProperty(key, s"$tag-end")
+      sc.parallelize(Seq(1), 1).count()
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never saw the sentinel")
+      (out, jobs.get)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("job budget: a cleaned TestFeed import with views stays within its jobs; the typed read runs none") {
+    val root = Files.createTempDirectory("store-jobs")
+    val feed = TestFeed.writeTo(Files.createTempDirectory("fj"))
+    val (r, jobs) = jobsOf(Import.importGtfsAtomically(spark,
+      mkCfg(root, feed, "jobs", clean = true)
+        .copy(materializeViews = true, now = () => 1700000600L)))
+    assert(!r.importSkipped && r.newImport.isDefined)
+    assert(jobs <= ImportJobBudget, s"the import ran $jobs jobs, budget $ImportJobBudget")
+    val (entities, readJobs) = jobsOf(Import.readFeed(spark, feed))
+    assert(entities.nonEmpty)
+    assert(readJobs == 0, s"readFeed ran $readJobs jobs")
   }
 
   test("T1: second importer fails fast while the lock is held (NOWAIT)") {

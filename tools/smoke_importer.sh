@@ -7,7 +7,10 @@
 #   run 1: a real import — "importSkipped": false, a newDb is named,
 #          and the DSN file points at it (K4)
 #          an external reader (DuckDB, via python3's duckdb module) opens the
-#          published V2 and types its timestamps as timestamptz
+#          published V2 and types its timestamps as timestamptz, and checks
+#          the published entities: every trips/stop_times reference
+#          resolves, no stop_id or trip_id repeats, and each stop_times
+#          file is in (trip_id, stop_sequence) order
 #   run 2: the P5 digest short-circuit — "importSkipped": true, no new db
 # Both runs materialize the consumer views (GTFS_MATERIALIZE_VIEWS).
 # Fully offline (file:// URL; sbt resolves from the warm local cache).
@@ -53,22 +56,54 @@ db="$(sed -E 's/.*"newDb": "([^"]+)".*/\1/' <<<"$out1")"
 grep -qF "$db" "$work/dsn.txt" || {
   echo "[smoke] FAIL: DSN file does not point at $db" >&2; exit 1; }
 
-echo "[smoke] DuckDB reads the published arrivals_departures"
-python3 - "$store/dbs/$db/arrivals_departures" <<'PY' || {
+echo "[smoke] DuckDB reads the published arrivals_departures and checks the entities"
+python3 - "$store/dbs/$db" <<'PY' || {
 import sys
 try:
     import duckdb
 except ImportError:
     sys.exit("[smoke] FAIL: python3 has no duckdb module; the external-reader check cannot run")
-glob = sys.argv[1] + "/*/*.parquet"
-rows, ts_type = duckdb.sql(
+db = sys.argv[1]
+con = duckdb.connect()
+for entity in ("stops", "routes", "trips", "stop_times", "calendar", "calendar_dates"):
+    con.sql(f"CREATE VIEW {entity} AS SELECT * FROM read_parquet('{db}/{entity}/*.parquet')")
+rows, ts_type = con.sql(
     f"SELECT count(*), any_value(typeof(t_departure)) "
-    f"FROM read_parquet('{glob}', hive_partitioning = 1)").fetchone()
+    f"FROM read_parquet('{db}/arrivals_departures/*/*.parquet', hive_partitioning = 1)").fetchone()
 print(f"[smoke] duckdb: {rows} rows, t_departure {ts_type}")
 if not (rows > 0 and ts_type == "TIMESTAMP WITH TIME ZONE"):
     sys.exit(f"[smoke] FAIL: expected rows > 0 and TIMESTAMP WITH TIME ZONE, got {rows}, {ts_type}")
+# each check counts violations; every count must be 0
+checks = {
+    # delete-orphans (C10): every reference resolves
+    "trips.route_id without a route":
+        "SELECT count(*) FROM trips WHERE route_id NOT IN (SELECT route_id FROM routes)",
+    "trips.service_id without a service":
+        "SELECT count(*) FROM trips WHERE service_id NOT IN "
+        "(SELECT service_id FROM calendar UNION SELECT service_id FROM calendar_dates)",
+    "stop_times.trip_id without a trip":
+        "SELECT count(*) FROM stop_times WHERE trip_id NOT IN (SELECT trip_id FROM trips)",
+    "stop_times.stop_id without a stop":
+        "SELECT count(*) FROM stop_times WHERE stop_id NOT IN (SELECT stop_id FROM stops)",
+    # primary keys
+    "repeated stop_id": "SELECT count(*) - count(DISTINCT stop_id) FROM stops",
+    "repeated trip_id": "SELECT count(*) - count(DISTINCT trip_id) FROM trips",
+    # each stop_times file is in (trip_id, stop_sequence) order
+    "stop_times rows out of key order": f"""
+        SELECT count(*) FROM (
+          SELECT trip_id, stop_sequence,
+                 lag(trip_id) OVER w AS prev_trip, lag(stop_sequence) OVER w AS prev_seq
+          FROM read_parquet('{db}/stop_times/*.parquet', filename = true, file_row_number = true)
+          WINDOW w AS (PARTITION BY filename ORDER BY file_row_number))
+        WHERE prev_trip > trip_id OR (prev_trip = trip_id AND prev_seq > stop_sequence)""",
+}
+bad = {name: n for name, q in checks.items() if (n := con.sql(q).fetchone()[0]) != 0}
+n_st = con.sql("SELECT count(*) FROM stop_times").fetchone()[0]
+print(f"[smoke] duckdb: {len(checks)} entity checks over {n_st} stop_times")
+if n_st == 0 or bad:
+    sys.exit(f"[smoke] FAIL: entity checks: {bad or 'no stop_times'}")
 PY
-  echo "[smoke] FAIL: DuckDB could not read the published V2 as expected" >&2; exit 1; }
+  echo "[smoke] FAIL: DuckDB could not read or check the published import" >&2; exit 1; }
 
 echo "[smoke] run 2 (expect the P5 digest short-circuit)"
 out2="$(run_import 2 | grep -F '"importSkipped"')"

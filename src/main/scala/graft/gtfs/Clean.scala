@@ -1,6 +1,6 @@
 package graft.gtfs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -14,14 +14,17 @@ import graft.ops.Checkpoints.PinSyntax
   *
   * Scale design: every merge is groupBy-attrs + min(id) canonical +
   * remap join (no collects of fact-scale state); ordered-collect
-  * signatures only see per-trip / per-shape groups (bounded by feed
-  * geometry, not feed size); orphan cascades are left-semi joins in
-  * dependency order. All shuffles key on the natural entity ids.
+  * signatures and C7's and C9's per-group passes only see per-trip,
+  * per-shape or per-trip-pattern groups (bounded by feed geometry, not
+  * feed size); orphan cascades are left-semi joins in dependency order.
+  * All shuffles key on the natural entity ids.
   *
   * Materialization: one [[barrier]] per stage, or per segment of
   * row-local stages (the third field of [[Clean.stages]]), and inside a
   * stage every derived table that two or more outputs read is pinned
-  * once (`.pin()`), so it is computed once rather than once per reader.
+  * once (`.pin()`), so it is computed once rather than once per reader:
+  * a merge's canonical ids, C9's folds and the trips they drop, C10's
+  * surviving trips and stop_times.
   */
 object Clean {
 
@@ -51,8 +54,8 @@ object Clean {
     *
     * A barrier pins each entity in its own execution, so it cannot share
     * a table that several entities of one stage derive from: inside a
-    * stage, such a table (a merge's canonical ids, C9's trip windows,
-    * C10's surviving trips) is pinned once with the same lazy
+    * stage, such a table (a merge's canonical ids, C9's folds, C10's
+    * surviving trips) is pinned once with the same lazy
     * [[graft.ops.Checkpoints.pin]] and read by every output. Those pins
     * have no release path of their own, and neither do the barrier's:
     * both are localCheckpoint RDDs that Spark's ContextCleaner drops once
@@ -66,29 +69,29 @@ object Clean {
     * stage's name in the clean log (C18), its transform, and whether a
     * [[barrier]] follows it. C5, C2, C3 and C4 only project and filter
     * each entity on its own, so they share the one barrier after C4. */
-  val stages: Seq[(String, SparkSession => Feed => Feed, Boolean)] = Seq(
-    ("keep-spec-columns", _ => keepSpecColumns, false),
-    ("default-on-errs", _ => defaultOnErrs, false),
-    ("drop-errs", _ => dropErrs, false),
-    ("check-null-coords", _ => checkNullCoords, true),
-    ("remove-red-agencies", _ => removeRedundantAgencies, true),
-    ("remove-red-stops", _ => removeRedundantStops, true),
-    ("remove-red-routes", _ => removeRedundantRoutes, true),
-    ("remove-red-services", _ => removeRedundantServices, true),
-    ("minimize-services", _ => minimizeServices, true),
-    ("minimize-stoptimes", _ => minimizeStopTimes, true),
-    ("min-shapes", s => minShapes(_, MinShapesEpsilonDeg)(s), true),
-    ("remove-red-shapes", _ => removeRedundantShapes, true),
-    ("remove-red-trips", _ => removeRedundantTrips, true),
-    ("delete-orphans", _ => deleteOrphans, true))
+  val stages: Seq[(String, Feed => Feed, Boolean)] = Seq(
+    ("keep-spec-columns", keepSpecColumns, false),
+    ("default-on-errs", defaultOnErrs, false),
+    ("drop-errs", dropErrs, false),
+    ("check-null-coords", checkNullCoords, true),
+    ("remove-red-agencies", removeRedundantAgencies, true),
+    ("remove-red-stops", removeRedundantStops, true),
+    ("remove-red-routes", removeRedundantRoutes, true),
+    ("remove-red-services", removeRedundantServices, true),
+    ("minimize-services", minimizeServices, true),
+    ("minimize-stoptimes", minimizeStopTimes, true),
+    ("min-shapes", minShapes(_, MinShapesEpsilonDeg), true),
+    ("remove-red-shapes", removeRedundantShapes, true),
+    ("remove-red-trips", removeRedundantTrips, true),
+    ("delete-orphans", deleteOrphans, true))
 
   /** Run every stage in order, each followed by its [[barrier]] if the
     * table places one there; with cleaning disabled the feed passes
     * through untouched. */
-  def apply(feed: Feed, cfg: Config = Config())(implicit spark: SparkSession): Feed =
+  def apply(feed: Feed, cfg: Config = Config()): Feed =
     if (!cfg.enabled) feed // C17 bypass (import.sh:38)
     else stages.foldLeft(feed) { case (f, (_, stage, barrierAfter)) =>
-      val out = stage(spark)(f)
+      val out = stage(f)
       if (barrierAfter) barrier(out) else out
     }
 
@@ -176,11 +179,13 @@ object Clean {
       .withColumn(fk, coalesce(col("canonical"), col(fk)))
       .drop("_rk", "canonical")
 
-  /** Merge by signature: canonical id = min(id) over the rows with an
-    * equal `sig` column. Returns (id→canonical remap, canonical ids). */
-  private def canonicalIds(sigs: DataFrame, id: String, sig: String)
+  /** Merge by signature: canonical id = min(id) over the rows equal on
+    * the `keys` columns (nulls equal). Returns (id→canonical remap,
+    * canonical ids). */
+  private def canonicalIds(sigs: DataFrame, id: String, keys: Seq[String])
       : (DataFrame, DataFrame) = {
-    val remap = sigs.withColumn("canonical", min(id).over(Window.partitionBy(sig)))
+    val remap = sigs.withColumn("canonical",
+        min(id).over(Window.partitionBy(keys.map(col): _*)))
       .select(col(id), col("canonical")).pin()
     (remap, remap.where(col(id) === col("canonical")).select(id))
   }
@@ -251,7 +256,7 @@ object Clean {
   // C13 --remove-red-services (import.sh:89-91): identical date sets.
   def removeRedundantServices(feed: Feed): Feed = {
     if (!feed.contains("calendar") && !feed.contains("calendar_dates")) return feed
-    val (remap, keep) = canonicalIds(serviceSignatures(feed), "service_id", "dsig")
+    val (remap, keep) = canonicalIds(serviceSignatures(feed), "service_id", Seq("dsig"))
     var f = feed
     feed.get("calendar").foreach { c =>
       f = f.updated("calendar", c.join(keep, Seq("service_id"), "left_semi"))
@@ -267,9 +272,10 @@ object Clean {
 
   // C7 --min-shapes (import.sh:71-73): Douglas-Peucker per shape.
   // flatMapGroups over one shape's ordered points — bounded group.
-  def minShapes(feed: Feed, epsilonDeg: Double)(implicit spark: SparkSession): Feed =
+  def minShapes(feed: Feed, epsilonDeg: Double): Feed =
     feed.get("shapes") match {
       case Some(shapes) =>
+        val spark = shapes.sparkSession
         import spark.implicits._
         val simplified = shapes
           .select(col("shape_id"), col("shape_pt_lat"), col("shape_pt_lon"),
@@ -302,7 +308,7 @@ object Clean {
   def removeRedundantShapes(feed: Feed): Feed =
     feed.get("shapes") match {
       case Some(shapes) =>
-        val (remap, keep) = canonicalIds(shapeSignatures(shapes), "shape_id", "ssig")
+        val (remap, keep) = canonicalIds(shapeSignatures(shapes), "shape_id", Seq("ssig"))
         var f = feed.updated("shapes", shapes.join(keep, Seq("shape_id"), "left_semi"))
         feed.get("trips").foreach { t =>
           f = f.updated("trips", remapFk(t, "shape_id", remap, "shape_id"))
@@ -333,37 +339,23 @@ object Clean {
     * `t0`, so time-shifted but otherwise identical trips do NOT merge
     * (matching gtfsclean, which folds those via frequencies instead —
     * C9). */
-  private def tripSignatures(feed: Feed): Option[DataFrame] =
-    (feed.get("trips"), feed.get("stop_times")) match {
-      case (Some(trips), Some(st)) =>
-        Some(trips.join(relativeStopTimeSignatures(st), Seq("trip_id"), "left")
-          .withColumn("tsig", sha2(concat_ws("#",
-            coalesce(col("route_id"), lit("")),
-            coalesce(col("service_id"), lit("")),
-            coalesce(col("rsig"), lit("")),
-            coalesce(col("t0").cast("string"), lit(""))), 256))
-          .select("trip_id", "tsig"))
-      case _ => None
-    }
+  private val TripSignature = Seq("route_id", "service_id", "rsig", "t0")
 
   // C16 --remove-red-trips (import.sh:98-100)
   def removeRedundantTrips(feed: Feed): Feed =
-    tripSignatures(feed) match {
-      case Some(sig) =>
-        val (remap, keep) = canonicalIds(sig, "trip_id", "tsig")
-        var f = feed
-        feed.get("trips").foreach { t =>
-          f = f.updated("trips", t.join(keep, Seq("trip_id"), "left_semi"))
+    (feed.get("trips"), feed.get("stop_times")) match {
+      case (Some(trips), Some(st)) =>
+        val sig = trips.join(relativeStopTimeSignatures(st), Seq("trip_id"), "left")
+          .select("trip_id", TripSignature: _*)
+        val (remap, keep) = canonicalIds(sig, "trip_id", TripSignature)
+        val f = feed.updated("trips", trips.join(keep, Seq("trip_id"), "left_semi"))
+          .updated("stop_times", st.join(keep, Seq("trip_id"), "left_semi"))
+        feed.get("frequencies") match {
+          case Some(fr) => f.updated("frequencies",
+            remapFk(fr, "trip_id", remap, "trip_id").dropDuplicates())
+          case None => f
         }
-        feed.get("stop_times").foreach { st =>
-          f = f.updated("stop_times", st.join(keep, Seq("trip_id"), "left_semi"))
-        }
-        feed.get("frequencies").foreach { fr =>
-          f = f.updated("frequencies", remapFk(fr, "trip_id", remap, "trip_id")
-            .dropDuplicates())
-        }
-        f
-      case None => feed
+      case _ => feed
     }
 
   // C8 --minimize-services (import.sh:74-76): re-encode each service as
@@ -455,69 +447,61 @@ object Clean {
     feed.updated("calendar", newCalendar).updated("calendar_dates", newCalDates)
   }
 
+  /** One trip as C9 sees it: its trip pattern (route, service, `rsig`)
+    * and its first departure `t0`. */
+  private[gtfs] final case class PatternTrip(trip_id: String, route_id: String,
+      service_id: String, rsig: String, t0: Option[Long])
+
+  /** C9's folds over one trip pattern's trips in (t0, trip_id) order,
+    * nulls first: (trip_id, keep_trip, t0, headway_secs) for every trip
+    * of every fold.
+    *
+    * delta_i = t0_i − t0_{i−1}, absent for the first trip or a null t0.
+    * A run starts at trip i when delta_i is absent, ≤ 0, or differs from
+    * delta_{i−1}; a run of 2 or more trips is foldable, at the headway
+    * delta of its first trip. A fold is a foldable run plus the trip
+    * before it, unless that trip's own run is foldable: two ADJACENT runs
+    * share their boundary trip, and folding it into both would drop the
+    * later fold's exemplar as a member of the earlier one. Only folds of
+    * 3 or more trips are emitted; the fold's first trip is `keep_trip`. */
+  private def foldRuns(trips: IndexedSeq[PatternTrip])
+      : Seq[(String, String, Long, Long)] = {
+    val delta = trips.indices.map(i =>
+      if (i == 0) None else for (a <- trips(i - 1).t0; b <- trips(i).t0) yield b - a)
+    val starts = trips.indices.filter(i =>
+      i == 0 || delta(i).forall(_ <= 0) || delta(i) != delta(i - 1))
+    val runs = starts.zip(starts.drop(1) :+ trips.size) // [start, end)
+    def foldable(run: (Int, Int)) = run._2 - run._1 >= 2
+    runs.indices.filter(k => foldable(runs(k))).flatMap { k =>
+      val (start, end) = runs(k)
+      // a foldable run starts at a delta, so it is never the first run
+      val from = if (foldable(runs(k - 1))) start else start - 1
+      if (end - from < 3) Nil
+      else (from until end).map(i =>
+        (trips(i).trip_id, trips(from).trip_id, trips(i).t0.get, delta(start).get))
+    }
+  }
+
   // C9 --minimize-stoptimes (import.sh:77-79): trips identical up to a
   // time shift that repeat at constant headway fold into
-  // frequencies.txt (exact_times=1): islands of constant first-departure
-  // delta per (route, service, relative-stop-sequence signature).
+  // frequencies.txt (exact_times=1). One sorted pass per trip pattern
+  // (route, service, relative-stop-sequence signature) decides the folds.
   def minimizeStopTimes(feed: Feed): Feed =
     (feed.get("trips"), feed.get("stop_times")) match {
       case (Some(trips), Some(st)) =>
+        val spark = trips.sparkSession
+        import spark.implicits._
         val keyed = trips.join(relativeStopTimeSignatures(st), Seq("trip_id"))
           .select(col("trip_id"), col("route_id"), col("service_id"),
             col("rsig"), col("t0"))
-        val wOrd = Window.partitionBy("route_id", "service_id", "rsig")
-          .orderBy("t0", "trip_id")
-        val withDelta = keyed
-          .withColumn("delta", col("t0") - lag("t0", 1).over(wOrd))
-          .withColumn("boundary",
-            when(col("delta").isNull || !(col("delta") <=> lag("delta", 1).over(wOrd)) ||
-              col("delta") <= 0, 1).otherwise(0))
-          .withColumn("run_id", sum("boundary").over(
-            wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-          .pin()
-        // Fold runs of >= 3 equally-spaced trips (2+ equal gaps). A run's
-        // rows carry the gap to their predecessor, so the run's first
-        // TRIP is the row immediately before the run's first gap row —
-        // UNLESS that row is itself a gap row of a foldable run (two
-        // ADJACENT runs with different headways share their boundary
-        // trip; folding it into both would drop run B's exemplar as a
-        // member of run A, leaving a dangling frequencies.trip_id).
-        // Priority goes to the earlier run; the later run folds without
-        // its predecessor only if it still covers >= 3 trips.
-        val runKey = Seq("route_id", "service_id", "rsig", "run_id")
-        val foldable = withDelta.where(col("delta").isNotNull && col("delta") > 0)
-          .groupBy(runKey.map(col): _*)
-          .agg(count(lit(1)).as("n_gaps"), min("delta").as("headway_secs"))
-          .where(col("n_gaps") >= 2)
-          .pin()
-        val prevOfRun = withDelta
-          .withColumn("next_run", lead("run_id", 1).over(wOrd))
-        val members = withDelta.join(foldable.select(runKey.map(col): _*), runKey)
-          .select(col("trip_id"), col("route_id"), col("service_id"),
-            col("rsig"), col("run_id"), col("t0"))
-        val predecessors = prevOfRun
-          // exclude predecessors whose OWN run is foldable (overlap case)
-          .join(foldable.select(runKey.map(col): _*), runKey, "left_anti")
-          .join(foldable.select(col("route_id"), col("service_id"), col("rsig"),
-            col("run_id").as("next_run")).distinct(),
-            Seq("route_id", "service_id", "rsig", "next_run"))
-          .where(col("run_id") =!= col("next_run"))
-          .select(col("trip_id"), col("route_id"), col("service_id"),
-            col("rsig"), col("next_run").as("run_id"), col("t0"))
-        val folded0 = members.unionByName(predecessors)
-        val wFold = Window.partitionBy("route_id", "service_id", "rsig", "run_id")
-        // folds shrunk below 3 trips by the exclusion stay scheduled
-        val folded = folded0
-          .withColumn("fold_size", count(lit(1)).over(wFold))
-          .where(col("fold_size") >= 3)
-          .drop("fold_size")
-        val exemplars = folded
-          .withColumn("keep_trip", first("trip_id").over(
-            wFold.orderBy("t0", "trip_id")
-              .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+        // Spark sorts each group: Scala's String order differs from
+        // Spark's for characters outside the BMP
+        val exemplars = keyed.as[PatternTrip]
+          .groupByKey(t => (t.route_id, t.service_id, t.rsig))
+          .flatMapSortedGroups(col("t0"), col("trip_id"))((_, it) => foldRuns(it.toIndexedSeq))
+          .toDF("trip_id", "keep_trip", "t0", "headway_secs")
           .pin()
         val freqRows = exemplars
-          .join(foldable, runKey)
           .groupBy(col("keep_trip").as("trip_id"))
           .agg(GtfsTime.toGtfsString(min("t0")).as("start_time"),
             // half-open [start, end): end = last departure + headway

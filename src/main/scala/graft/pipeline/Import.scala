@@ -286,7 +286,7 @@ object Import {
       runScript(script, extractDir, dbPath)
     }
     // L2 lower-cased language codes (import.sh:125), then cleaning
-    val feed = Clean(lowerLangCodes(readFeed(spark, extractDir)), cfg.cleanConfig)(spark)
+    val feed = Clean(lowerLangCodes(readFeed(spark, extractDir)), cfg.cleanConfig)
     writeFeed(feed, dbPath)
     feed
   }

@@ -120,6 +120,66 @@ class CleanSpec extends SparkSpec {
     assert(freq.toSeq == Seq(("09:00:00", "10:30:00", 1800)))
   }
 
+  /** C9 over one route and service: each trip runs stops s1 then s2, 2
+    * minutes apart, from its first departure in `t0s` (seconds; None: a
+    * trip with no times). `extraTripsRows` repeats trips rows. Returns
+    * the surviving trips rows' ids, sorted, and the frequencies rows. */
+  private def c9(t0s: Seq[(String, Option[Int])], extraTripsRows: Seq[String] = Nil)
+      : (Seq[String], Seq[(String, String, String, Int, Int)]) = {
+    import spark.implicits._
+    def fmt(s: Int) = f"${s / 3600}%02d:${s % 3600 / 60}%02d:${s % 60}%02d"
+    val trips = (t0s.map(_._1) ++ extraTripsRows).map(t => (t, "r1", "svc1"))
+      .toDF("trip_id", "route_id", "service_id")
+    val st = t0s.flatMap { case (t, t0) =>
+      Seq((t, t0.map(fmt).orNull, "s1", 1), (t, t0.map(s => fmt(s + 120)).orNull, "s2", 2))
+    }.map { case (t, time, stop, seq) => (t, time, time, stop, seq) }
+      .toDF("trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence")
+    val f = Clean.minimizeStopTimes(Map("trips" -> trips, "stop_times" -> st))
+    (f("trips").select("trip_id").as[String].collect().sorted.toSeq,
+      f("frequencies").select("trip_id", "start_time", "end_time", "headway_secs", "exact_times")
+        .as[(String, String, String, Int, Int)].collect().sorted.toSeq)
+  }
+
+  private def at(h: Int, m: Int): Option[Int] = Some(h * 3600 + m * 60)
+
+  test("C9 folds a run with its predecessor, but not a later adjacent run of two gaps") {
+    // a1-a3 are 10 minutes apart and fold with a0; b1, b2 are 15 minutes
+    // apart, but their predecessor a3 belongs to the earlier fold, so
+    // they would fold only two trips and stay scheduled
+    assert(c9(Seq("a0" -> at(6, 0), "a1" -> at(6, 10), "a2" -> at(6, 20), "a3" -> at(6, 30),
+      "b1" -> at(6, 45), "b2" -> at(7, 0))) ==
+      (Seq("a0", "b1", "b2"), Seq(("a0", "06:00:00", "06:40:00", 600, 1))))
+  }
+
+  test("C9 takes the later trip_id of two equal-t0 trips as the run's predecessor") {
+    assert(c9(Seq("p1" -> at(7, 0), "p2" -> at(7, 0), "q1" -> at(7, 10), "q2" -> at(7, 20))) ==
+      (Seq("p1", "p2"), Seq(("p2", "07:00:00", "07:30:00", 600, 1))))
+  }
+
+  test("C9 keeps trips with no times scheduled") {
+    assert(c9(Seq("n1" -> None, "n2" -> None, "a" -> at(8, 0), "b" -> at(8, 15),
+      "c" -> at(8, 30))) ==
+      (Seq("a", "n1", "n2"), Seq(("a", "08:00:00", "08:45:00", 900, 1))))
+  }
+
+  test("C9 with a duplicated trips row: a repeated last trip ends the run, a repeated middle trip splits it") {
+    val t0s = Seq("d0" -> at(9, 0), "d1" -> at(9, 5), "d2" -> at(9, 10))
+    assert(c9(t0s, extraTripsRows = Seq("d2")) ==
+      (Seq("d0"), Seq(("d0", "09:00:00", "09:15:00", 300, 1))))
+    assert(c9(t0s, extraTripsRows = Seq("d1")) == (Seq("d0", "d1", "d1", "d2"), Nil))
+  }
+
+  test("C16 keeps trips whose route and service ids differ only in where a '#' falls") {
+    import spark.implicits._
+    val feed: Clean.Feed = Map(
+      "trips" -> Seq(("t1", "a#b", "c"), ("t2", "a", "b#c"))
+        .toDF("trip_id", "route_id", "service_id"),
+      "stop_times" -> Seq("t1", "t2").flatMap(t => Seq(
+        (t, "08:00:00", "08:00:00", "s1", 1), (t, "08:10:00", "08:10:00", "s2", 2)))
+        .toDF("trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence"))
+    assert(ids(Clean.removeRedundantTrips(feed)("trips"), "trip_id") == Set("t1", "t2"))
+  }
+
   test("cleaned feed writes back as GTFS CSV (tidied.gtfs parity) and re-reads") {
     val out = Files.createTempDirectory("tidied")
     val cleaned = Map(

@@ -145,7 +145,7 @@ class MalformedFeedSpec extends SparkSpec {
 
   /** readFeed → Clean.apply → V2: the cleaned feed and V2's rows. */
   private def cleanAndV2(dir: Path): (Clean.Feed, org.apache.spark.sql.DataFrame) = {
-    val cleaned = Clean(Import.readFeed(spark, dir))(spark)
+    val cleaned = Clean(Import.readFeed(spark, dir))
     (cleaned, Views.arrivalsDepartures(cleaned))
   }
 

@@ -8,9 +8,11 @@
 #          and the DSN file points at it (K4)
 #          an external reader (DuckDB, via python3's duckdb module) opens the
 #          published V2 and types its timestamps as timestamptz, and checks
-#          the published entities: every trips/stop_times reference
-#          resolves, no stop_id or trip_id repeats, and each stop_times
-#          file is in (trip_id, stop_sequence) order
+#          the published entities: every trips/stop_times/frequencies
+#          reference resolves (no frequencies row names a missing trip,
+#          which C9's folds and C10's orphan pass promise), no stop_id or
+#          trip_id repeats, and each stop_times file is in
+#          (trip_id, stop_sequence) order
 #   run 2: the P5 digest short-circuit — "importSkipped": true, no new db
 # Both runs materialize the consumer views (GTFS_MATERIALIZE_VIEWS).
 # Fully offline (file:// URL; sbt resolves from the warm local cache).
@@ -65,7 +67,8 @@ except ImportError:
     sys.exit("[smoke] FAIL: python3 has no duckdb module; the external-reader check cannot run")
 db = sys.argv[1]
 con = duckdb.connect()
-for entity in ("stops", "routes", "trips", "stop_times", "calendar", "calendar_dates"):
+for entity in ("stops", "routes", "trips", "stop_times", "calendar", "calendar_dates",
+               "frequencies"):
     con.sql(f"CREATE VIEW {entity} AS SELECT * FROM read_parquet('{db}/{entity}/*.parquet')")
 rows, ts_type = con.sql(
     f"SELECT count(*), any_value(typeof(t_departure)) "
@@ -85,6 +88,9 @@ checks = {
         "SELECT count(*) FROM stop_times WHERE trip_id NOT IN (SELECT trip_id FROM trips)",
     "stop_times.stop_id without a stop":
         "SELECT count(*) FROM stop_times WHERE stop_id NOT IN (SELECT stop_id FROM stops)",
+    # minimize-stoptimes (C9) keeps each fold's exemplar trip
+    "frequencies.trip_id without a trip":
+        "SELECT count(*) FROM frequencies WHERE trip_id NOT IN (SELECT trip_id FROM trips)",
     # primary keys
     "repeated stop_id": "SELECT count(*) - count(DISTINCT stop_id) FROM stops",
     "repeated trip_id": "SELECT count(*) - count(DISTINCT trip_id) FROM trips",

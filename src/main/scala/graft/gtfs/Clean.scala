@@ -1,8 +1,11 @@
 package graft.gtfs
 
+import java.time.LocalDate
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.storage.StorageLevel
 
 import graft.ops.Checkpoints.PinSyntax
 
@@ -21,10 +24,15 @@ import graft.ops.Checkpoints.PinSyntax
   *
   * Materialization: one [[barrier]] per stage, or per segment of
   * row-local stages (the third field of [[Clean.stages]]), and inside a
-  * stage every derived table that two or more outputs read is pinned
-  * once (`.pin()`), so it is computed once rather than once per reader:
-  * a merge's canonical ids, C9's folds and the trips they drop, C10's
-  * surviving trips and stop_times.
+  * stage every derived table that two or more outputs read is
+  * materialized once, so it is computed once rather than once per
+  * reader. Most are pinned (`.pin()`): a merge's canonical ids, C9's
+  * folds and the trips they drop, C10's surviving trips and stop_times.
+  * C8's per-service encoding is persisted instead, with a blocking
+  * unpersist deferred to [[graft.ops.Releases]]: a pin is freed only
+  * when Spark's ContextCleaner collects it, while Warmup (which runs C8
+  * and must leave no cached blocks behind) and the import free C8's at
+  * their drain.
   */
 object Clean {
 
@@ -158,13 +166,12 @@ object Clean {
       case None => feed
     }
 
-  /** Generic redundant-entity merge: group rows equal on `attrs`,
-    * canonical id = min(id) (deterministic, C6-compatible —
+  /** Generic redundant-entity merge: group rows equal on `attrs` (nulls
+    * equal), canonical id = min(id) (deterministic, C6-compatible —
     * SURVEY.md §7.4 #5), return (deduped entity, id→canonical remap). */
   private def mergeOn(df: DataFrame, id: String, attrs: Seq[String])
       : (DataFrame, DataFrame) = {
-    val w = Window.partitionBy(attrs.map(c =>
-      coalesce(col(c).cast("string"), lit("\u2400null"))): _*)
+    val w = Window.partitionBy(attrs.map(col): _*)
     val withCanon = df.withColumn("_canonical", min(col(id)).over(w)).pin()
     val remap = withCanon.select(col(id), col("_canonical").as("canonical"))
     val deduped = withCanon.where(col(id) === col("_canonical")).drop("_canonical")
@@ -243,20 +250,19 @@ object Clean {
       case None => feed
     }
 
-  /** Canonical per-service date-set signature: ordered distinct dates
-    * digest. Groups are bounded by the service's calendar span. */
-  private def serviceSignatures(feed: Feed): DataFrame = {
-    val days = Views.serviceDays(feed)
-    days.select(col("service_id"), date_format(col("svc_date"), "yyyyMMdd").as("d"))
-      .distinct()
-      .groupBy("service_id")
-      .agg(sha2(array_join(array_sort(collect_list(col("d"))), ","), 256).as("dsig"))
-  }
+  /** One row per service: its sorted distinct dates, `dates`. V1's
+    * expansion already holds each (service, date) pair once. Groups are
+    * bounded by the service's calendar span. */
+  private def serviceDateSets(feed: Feed): DataFrame =
+    Views.serviceDays(feed).groupBy("service_id")
+      .agg(sort_array(collect_list(col("svc_date"))).as("dates"))
 
   // C13 --remove-red-services (import.sh:89-91): identical date sets.
   def removeRedundantServices(feed: Feed): Feed = {
     if (!feed.contains("calendar") && !feed.contains("calendar_dates")) return feed
-    val (remap, keep) = canonicalIds(serviceSignatures(feed), "service_id", Seq("dsig"))
+    val sigs = serviceDateSets(feed).select(col("service_id"),
+      sha2(concat_ws(",", col("dates").cast("array<string>")), 256).as("dsig"))
+    val (remap, keep) = canonicalIds(sigs, "service_id", Seq("dsig"))
     var f = feed
     feed.get("calendar").foreach { c =>
       f = f.updated("calendar", c.join(keep, Seq("service_id"), "left_semi"))
@@ -358,91 +364,57 @@ object Clean {
       case _ => feed
     }
 
+  /** C8's encoding of one service's sorted distinct dates: the weekly
+    * mask, Monday first, when a calendar row is cheaper (None
+    * otherwise), and the dates calendar_dates must still add.
+    *
+    * A weekday is in the mask iff the service runs on every occurrence
+    * of it in [first, last]; a weekday the span never contains stays
+    * out. So the encoding expands to exactly `dates` and never needs an
+    * exception_type 2 row. A calendar row costs one row plus the
+    * off-mask dates, and is used iff that is fewer rows than `dates`. */
+  private def encodeService(dates: IndexedSeq[LocalDate])
+      : (Option[Seq[Int]], Seq[LocalDate]) = {
+    def dayOfWeek(d: LocalDate) = d.getDayOfWeek.getValue - 1 // Monday = 0
+    val len = dates.last.toEpochDay - dates.head.toEpochDay + 1
+    // one of each weekday per whole week, and one more for each weekday
+    // the remainder, starting at the first date's, reaches
+    def possible(w: Int) =
+      len / 7 + (if (Math.floorMod(w - dayOfWeek(dates.head), 7) < len % 7) 1 else 0)
+    val mask = (0 to 6).map(w =>
+      if (possible(w) > 0 && dates.count(dayOfWeek(_) == w) == possible(w)) 1 else 0)
+    val offMask = dates.filter(d => mask(dayOfWeek(d)) == 0)
+    if (1 + offMask.size < dates.size) (Some(mask), offMask) else (None, dates)
+  }
+
   // C8 --minimize-services (import.sh:74-76): re-encode each service as
   // the cheaper of (weekly calendar + exceptions) vs (pure
-  // calendar_dates). The mask keeps a weekday only when the service
-  // runs on EVERY occurrence of it within [min,max] — so the encoding
-  // never needs exception_type=2 rows and expansion is exactly
-  // preserved (property-tested in CleanSpec). Per-service fan-out is
-  // bounded by the calendar span.
+  // calendar_dates), one [[encodeService]] call per service; the
+  // expansion is exactly preserved (property-tested in
+  // CleanPropertySpec).
   def minimizeServices(feed: Feed): Feed = {
     if (!feed.contains("calendar") && !feed.contains("calendar_dates")) return feed
-    val days = Views.serviceDays(feed).select("service_id", "svc_date")
-    // The whole weekly-mask decision folds into ONE aggregation over
-    // `days` plus row-level arithmetic:
-    //   - per-dow actual counts ride the span agg as 7 conditional
-    //     counts;
-    //   - the service's distinct date set itself rides the SAME
-    //     aggregation (collect_set shares the partial-agg pass), so the
-    //     exception-date enumeration below is a row-local explode of
-    //     `enc` — round 9 instead JOINED `days` back against enc, which
-    //     made `days` a two-consumer subtree whose exchange had to be
-    //     pinned and re-read (r10 probe: the join leg alone held the
-    //     query at ~2.3 s steady; this shape runs the days pipeline
-    //     exactly once). Per-group state = one service's distinct
-    //     dates — bounded by its calendar span (GTFS feeds span ≤ a few
-    //     years, ≤ ~1500 entries), a dimension bound, never
-    //     corpus-scale;
-    //   - occurrences of weekday dw in [d0, d1] in CLOSED FORM —
-    //     first-occurrence offset o = (dw − weekday(d0)) mod 7, then
-    //     1 + ⌊(len − 1 − o) / 7⌋ if o < len else 0 — a day-granular
-    //     explode would pay a corpus-scale shuffle to count what
-    //     arithmetic already knows;
-    //   - mask bit dw = (possible_dw > 0 AND actual_dw = possible_dw):
-    //     a dow the span never contains stays out of the mask, exactly
-    //     the semantics the old dropped-zero-possible rows encoded.
-    // collect_set also dedups, but serviceDays already emits distinct
-    // (service_id, svc_date) on a service_id partitioning, so the
-    // count/na_* aggregates see deduped rows (they must: a duplicate
-    // date would skew the coverage counts).
-    val dowCounts = (0 to 6).map(dw =>
-      count(when(expr(s"weekday(svc_date) = $dw"), 1)).as(s"na_$dw"))
-    val span = days.groupBy("service_id")
-      .agg(min("svc_date").as("d0"),
-        (Seq(max("svc_date").as("d1"), count(lit(1)).as("n_dates"),
-          sort_array(collect_set(col("svc_date"))).as("dates")) ++
-          dowCounts): _*)
-    val len = datediff(col("d1"), col("d0")) + 1
-    def nPossible(dw: Int) = {
-      val o = (lit(dw) - expr("weekday(d0)") + 7) % 7
-      when(o < len, lit(1) + floor((len - 1 - o) / 7)).otherwise(lit(0))
-    }
-    def inMask(dw: Int) =
-      (nPossible(dw) > 0 && col(s"na_$dw") === nPossible(dw)).cast("int")
-    // `enc` has TWO consumers (newCalendar, newCalDates) whose pruned
-    // subtrees canonicalize differently (round-8 plan audit: the mask
-    // pipeline appeared twice under a repartition pin). enc is ONE ROW
-    // PER SERVICE — dimension-scale at any corpus size (services ≪
-    // stop_times) — so materialize it: persist + deferred unpersist via
-    // ops.Releases (the fixpoint's caller-owns-release pattern;
-    // Verify/Bench/Probe/Explain and the import path drain).
-    val enc = span
-      .select(Seq(col("service_id"), col("d0"), col("d1"), col("n_dates"),
-        col("dates")) ++
-        (0 to 6).map(dw => inMask(dw).as(s"dow_$dw")) ++
-        Seq((0 to 6).map(dw => when(inMask(dw) === 1, col(s"na_$dw"))
-          .otherwise(lit(0L))).reduce(_ + _).as("n_covered")): _*)
-      .withColumn("mask_arr", array((0 to 6).map(dw => col(s"dow_$dw")): _*))
-      .withColumn("cost_cal", lit(1) + (col("n_dates") - col("n_covered")))
-      .withColumn("use_calendar",
-        col("cost_cal") < col("n_dates") && col("n_covered") > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // blocking: runs at drain, post-materialization — memory must be
-    // observably freed when drain returns (WarmupSpec pins this)
+    val encode = udf((dates: Seq[LocalDate]) => encodeService(dates.toIndexedSeq))
+    // One row per service, read by both outputs. Persisted with a
+    // blocking release deferred to ops.Releases, not pinned: a caller
+    // that drains (Warmup, the import's end) must find it freed.
+    val enc = serviceDateSets(feed)
+      .where(size(col("dates")) > 0) // a service whose only dates are null has none
+      .select(col("service_id"), col("dates")(0).as("d0"),
+        element_at(col("dates"), -1).as("d1"), encode(col("dates")).as("e"))
+      .select(col("service_id"), col("d0"), col("d1"), col("e._1").as("mask"),
+        col("e._2").as("added"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     graft.ops.Releases.defer(() => { enc.unpersist(true); () })
     val dowNames = Seq("monday", "tuesday", "wednesday", "thursday", "friday",
       "saturday", "sunday")
-    val newCalendar = enc.where(col("use_calendar"))
+    val newCalendar = enc.where(col("mask").isNotNull)
       .select(Seq(col("service_id")) ++
-        dowNames.zipWithIndex.map { case (n, i) => col(s"dow_$i").as(n) } ++
+        dowNames.zipWithIndex.map { case (n, i) => col("mask")(i).as(n) } ++
         Seq(date_format(col("d0"), "yyyyMMdd").as("start_date"),
           date_format(col("d1"), "yyyyMMdd").as("end_date")): _*)
-    val newCalDates = enc
-      .select(col("service_id"), col("use_calendar"), col("mask_arr"),
-        explode(col("dates")).as("svc_date"))
-      .where(!col("use_calendar") ||
-        element_at(col("mask_arr"), expr("weekday(svc_date)") + 1) === 0)
-      .select(col("service_id"), date_format(col("svc_date"), "yyyyMMdd").as("date"),
+    val newCalDates = enc.select(col("service_id"), explode(col("added")).as("d"))
+      .select(col("service_id"), date_format(col("d"), "yyyyMMdd").as("date"),
         lit(1).as("exception_type"))
     feed.updated("calendar", newCalendar).updated("calendar_dates", newCalDates)
   }

@@ -84,9 +84,8 @@ object Views {
     // rather than distinct(): hash-partitioning on service_id satisfies
     // the dedup's (service_id, svc_date) clustering, so this costs the
     // SAME single shuffle — but leaves the output partitioned on the
-    // key every consumer groups/joins by (the arrivals star join, V6/V7
-    // stats, and minimizeServices' four `days` consumers all reuse this
-    // one exchange instead of each re-shuffling or re-expanding)
+    // key every consumer groups/joins by (the arrivals star join and
+    // V6/V7 stats reuse this one exchange instead of re-shuffling)
     val deduped = base.repartition(col("service_id"))
       .dropDuplicates("service_id", "svc_date")
     removed.foldLeft(deduped)((b, r) =>

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import graft.SparkSpec
 import graft.pipeline.Import
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 
 /** Cleaning transforms C2-C16 against the FIXTURES.md §B feed. */
 class CleanSpec extends SparkSpec {
@@ -30,6 +31,15 @@ class CleanSpec extends SparkSpec {
     val f = Clean.removeRedundantAgencies(rawFeed)
     assert(ids(f("agency"), "agency_id") == Set("a1"))
     assert(ids(f("routes"), "agency_id") == Set("a1"))
+  }
+
+  test("C11 keeps agencies that differ only in a NULL vs a '\u2400null' attribute") {
+    import spark.implicits._
+    val agency = Seq(("a1", None), ("a2", Some("\u2400null")))
+      .map { case (id, phone) => (id, "Transit", phone, "Europe/Berlin") }
+      .toDF("agency_id", "agency_name", "agency_phone", "agency_timezone")
+    val f = Clean.removeRedundantAgencies(Map("agency" -> agency))
+    assert(ids(f("agency"), "agency_id") == Set("a1", "a2"))
   }
 
   test("C12 merges routes equal after agency remap") {
@@ -104,6 +114,57 @@ class CleanSpec extends SparkSpec {
     assert(after == before)
     // and the weekly service re-encodes as a calendar row, not 9 dates
     assert(f("calendar").where("service_id = 'svc1'").count() == 1)
+  }
+
+  /** C8 over a one-service feed: `calendar` as (mask, start, end) and
+    * `calendar_dates` as (date, exception_type). Returns the minimized
+    * calendar rows and calendar_dates rows, sorted. */
+  private def c8(calendar: Option[(Seq[Int], String, String)], dates: Seq[(String, Int)])
+      : (Seq[(String, Seq[Int], String, String)], Seq[(String, String, Int)]) = {
+    import spark.implicits._
+    val cal = calendar.toSeq.map { case (m, d0, d1) =>
+      ("svc", m(0), m(1), m(2), m(3), m(4), m(5), m(6), d0, d1)
+    }.toDF("service_id", "monday", "tuesday", "wednesday", "thursday", "friday",
+      "saturday", "sunday", "start_date", "end_date")
+    val cd = dates.map { case (d, e) => ("svc", d, e) }
+      .toDF("service_id", "date", "exception_type")
+    val f = Clean.minimizeServices(Map("calendar" -> cal, "calendar_dates" -> cd))
+    val days = Seq("monday", "tuesday", "wednesday", "thursday", "friday", "saturday", "sunday")
+    (f("calendar").select((Seq("service_id") ++ days ++ Seq("start_date", "end_date")).map(col): _*)
+      .collect().map(r => (r.getString(0), (1 to 7).map(r.getInt), r.getString(8), r.getString(9)))
+      .sortBy(_._1).toSeq,
+      f("calendar_dates").select("service_id", "date", "exception_type")
+        .as[(String, String, Int)].collect().sorted.toSeq)
+  }
+
+  private val weekdays = Seq(1, 1, 1, 1, 1, 0, 0)
+
+  test("C8 encodes Mon-Fri over four weeks without its first-day holiday as one calendar row") {
+    // 2024-01-01 is a Monday; removing it starts the span on the Tuesday
+    assert(c8(Some((weekdays, "20240101", "20240126")), Seq("20240101" -> 2)) ==
+      (Seq(("svc", weekdays, "20240102", "20240126")), Nil))
+  }
+
+  test("C8 keeps a sparse service's dates in calendar_dates when a mask costs more") {
+    // every 8 days: no weekday is run on each of its occurrences
+    val dates = Seq("20240101", "20240109", "20240117")
+    assert(c8(None, dates.map(_ -> 1)) == (Nil, dates.map(d => ("svc", d, 1))))
+    // one date: a calendar row would cost as much
+    assert(c8(None, Seq("20240105" -> 1)) == (Nil, Seq(("svc", "20240105", 1))))
+  }
+
+  test("C8 leaves a weekday out of the mask when the span never contains it") {
+    // Monday 2024-01-01 through Saturday 2024-01-06, every day
+    val days = (1 to 6).map(d => f"202401$d%02d" -> 1)
+    assert(c8(None, days) == (Seq(("svc", Seq(1, 1, 1, 1, 1, 1, 0), "20240101", "20240106")), Nil))
+  }
+
+  test("C8 encodes a mask with added off-mask dates as a calendar row plus exception_type 1 rows") {
+    // Mon/Wed/Fri over four weeks, plus Saturday 01-13 and Sunday 01-21
+    val mwf = Seq(1, 0, 1, 0, 1, 0, 0)
+    assert(c8(Some((mwf, "20240101", "20240126")), Seq("20240113" -> 1, "20240121" -> 1)) ==
+      (Seq(("svc", mwf, "20240101", "20240126")),
+        Seq(("svc", "20240113", 1), ("svc", "20240121", 1))))
   }
 
   test("C9 folds constant-headway trips into frequencies") {

@@ -11,8 +11,11 @@
 #          the published entities: every trips/stop_times/frequencies
 #          reference resolves (no frequencies row names a missing trip,
 #          which C9's folds and C10's orphan pass promise), no stop_id or
-#          trip_id repeats, and each stop_times file is in
-#          (trip_id, stop_sequence) order
+#          trip_id repeats, each stop_times file is in
+#          (trip_id, stop_sequence) order, and the services keep C8's
+#          encoding: one calendar row per service, none with an empty
+#          mask, and calendar_dates rows that only add dates (type 1)
+#          off the mask or outside the calendar span
 #   run 2: the P5 digest short-circuit — "importSkipped": true, no new db
 # Both runs materialize the consumer views (GTFS_MATERIALIZE_VIEWS).
 # Fully offline (file:// URL; sbt resolves from the warm local cache).
@@ -77,6 +80,7 @@ print(f"[smoke] duckdb: {rows} rows, t_departure {ts_type}")
 if not (rows > 0 and ts_type == "TIMESTAMP WITH TIME ZONE"):
     sys.exit(f"[smoke] FAIL: expected rows > 0 and TIMESTAMP WITH TIME ZONE, got {rows}, {ts_type}")
 # each check counts violations; every count must be 0
+mask = "[c.monday, c.tuesday, c.wednesday, c.thursday, c.friday, c.saturday, c.sunday]"
 checks = {
     # delete-orphans (C10): every reference resolves
     "trips.route_id without a route":
@@ -91,6 +95,18 @@ checks = {
     # minimize-stoptimes (C9) keeps each fold's exemplar trip
     "frequencies.trip_id without a trip":
         "SELECT count(*) FROM frequencies WHERE trip_id NOT IN (SELECT trip_id FROM trips)",
+    # minimize-services (C8): one calendar row per service, with a weekday
+    # in its mask, and calendar_dates only adds the dates the mask misses
+    "calendar_dates.exception_type <> 1":
+        "SELECT count(*) FROM calendar_dates WHERE exception_type <> 1",
+    "calendar_dates date on a mask weekday within its calendar span": f"""
+        SELECT count(*) FROM calendar_dates cd JOIN calendar c USING (service_id)
+        WHERE strptime(cd.date, '%Y%m%d')
+              BETWEEN strptime(c.start_date, '%Y%m%d') AND strptime(c.end_date, '%Y%m%d')
+          AND list_extract({mask}, isodow(strptime(cd.date, '%Y%m%d'))) = 1""",
+    "calendar row with an all-zero mask":
+        f"SELECT count(*) FROM calendar c WHERE NOT list_contains({mask}, 1)",
+    "repeated calendar.service_id": "SELECT count(*) - count(DISTINCT service_id) FROM calendar",
     # primary keys
     "repeated stop_id": "SELECT count(*) - count(DISTINCT stop_id) FROM stops",
     "repeated trip_id": "SELECT count(*) - count(DISTINCT trip_id) FROM trips",

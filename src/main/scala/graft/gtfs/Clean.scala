@@ -15,12 +15,12 @@ import graft.ops.Checkpoints.PinSyntax
   * runs all 14 stages in that order; the only setting is
   * [[Clean.Config]]'s C17 switch, which skips cleaning entirely.
   *
-  * Scale design: every merge is groupBy-attrs + min(id) canonical +
-  * remap join (no collects of fact-scale state); ordered-collect
-  * signatures and C7's and C9's per-group passes only see per-trip,
-  * per-shape or per-trip-pattern groups (bounded by feed geometry, not
-  * feed size); orphan cascades are left-semi joins in dependency order.
-  * All shuffles key on the natural entity ids.
+  * Scale design: a merge is groupBy-key + min(id) canonical + remap join.
+  * Merges and C9's folds key on the values they compare: attributes, or
+  * a service's dates, a shape's points or a trip's relative stop times
+  * as ordered arrays. Those collects and C7's and C9's per-group passes
+  * see only per-trip, per-shape or per-trip-pattern groups, bounded by
+  * feed geometry; orphan cascades are left-semi joins in dependency order.
   *
   * Materialization: one [[barrier]] per stage, or per segment of
   * row-local stages (the third field of [[Clean.stages]]), and inside a
@@ -260,9 +260,7 @@ object Clean {
   // C13 --remove-red-services (import.sh:89-91): identical date sets.
   def removeRedundantServices(feed: Feed): Feed = {
     if (!feed.contains("calendar") && !feed.contains("calendar_dates")) return feed
-    val sigs = serviceDateSets(feed).select(col("service_id"),
-      sha2(concat_ws(",", col("dates").cast("array<string>")), 256).as("dsig"))
-    val (remap, keep) = canonicalIds(sigs, "service_id", Seq("dsig"))
+    val (remap, keep) = canonicalIds(serviceDateSets(feed), "service_id", Seq("dates"))
     var f = feed
     feed.get("calendar").foreach { c =>
       f = f.updated("calendar", c.join(keep, Seq("service_id"), "left_semi"))
@@ -299,22 +297,20 @@ object Clean {
       case None => feed
     }
 
-  /** Ordered polyline signature per shape (bounded per-shape group). */
+  /** Per shape: `points`, its (lat, lon) structs in (sequence, lat, lon) order. */
   private def shapeSignatures(shapes: DataFrame): DataFrame =
     shapes
       .select(col("shape_id"),
         struct(col("shape_pt_sequence"), col("shape_pt_lat"), col("shape_pt_lon")).as("p"))
       .groupBy("shape_id")
-      .agg(sha2(array_join(transform(array_sort(collect_list(col("p"))),
-        x => concat_ws(",",
-          x.getField("shape_pt_lat").cast("string"),
-          x.getField("shape_pt_lon").cast("string"))), ";"), 256).as("ssig"))
+      .agg(transform(array_sort(collect_list("p")), _.dropFields("shape_pt_sequence"))
+        .as("points"))
 
   // C14 --remove-red-shapes (import.sh:92-94)
   def removeRedundantShapes(feed: Feed): Feed =
     feed.get("shapes") match {
       case Some(shapes) =>
-        val (remap, keep) = canonicalIds(shapeSignatures(shapes), "shape_id", Seq("ssig"))
+        val (remap, keep) = canonicalIds(shapeSignatures(shapes), "shape_id", Seq("points"))
         var f = feed.updated("shapes", shapes.join(keep, Seq("shape_id"), "left_semi"))
         feed.get("trips").foreach { t =>
           f = f.updated("trips", remapFk(t, "shape_id", remap, "shape_id"))
@@ -323,10 +319,9 @@ object Clean {
       case None => feed
     }
 
-  /** Per trip: its first departure `t0` and `rsig`, a digest of its
-    * ordered stop sequence with times relative to `t0` (bounded group:
-    * stops per trip). C9 folds trips equal on `rsig` into frequencies;
-    * C16 merges trips equal on it AND on `t0`. */
+  /** Per trip: its first departure `t0` and `rsig`, its [[RelStop]]s in
+    * stop_sequence order (bounded group: stops per trip). C9 folds trips
+    * equal on `rsig`; C16 merges trips equal on it and on a non-NULL `t0`. */
   private def relativeStopTimeSignatures(st: DataFrame): DataFrame =
     st.select(col("trip_id"), col("stop_sequence"), col("stop_id"),
         GtfsTime.toSeconds(col("arrival_time")).as("arr_s"),
@@ -336,10 +331,9 @@ object Clean {
         array_sort(collect_list(struct(col("stop_sequence"), col("stop_id"),
           col("arr_s"), col("dep_s")))).as("seq"))
       .select(col("trip_id"), col("t0"),
-        sha2(array_join(transform(col("seq"), x => concat_ws(":",
-          x.getField("stop_id"),
-          (x.getField("arr_s") - col("t0")).cast("string"),
-          (x.getField("dep_s") - col("t0")).cast("string"))), "|"), 256).as("rsig"))
+        transform(col("seq"), x => struct(x.getField("stop_id").as("stop_id"),
+          (x.getField("arr_s") - col("t0")).as("arr_s"),
+          (x.getField("dep_s") - col("t0")).as("dep_s"))).as("rsig"))
 
   /** Full signature per trip: route, service, relative stop times and
     * `t0`, so time-shifted but otherwise identical trips do NOT merge
@@ -351,9 +345,10 @@ object Clean {
   def removeRedundantTrips(feed: Feed): Feed =
     (feed.get("trips"), feed.get("stop_times")) match {
       case (Some(trips), Some(st)) =>
+        // a trip with no t0 cannot be timed: its own id keys it alone
         val sig = trips.join(relativeStopTimeSignatures(st), Seq("trip_id"), "left")
-          .select("trip_id", TripSignature: _*)
-        val (remap, keep) = canonicalIds(sig, "trip_id", TripSignature)
+          .withColumn("untimed", when(col("t0").isNull, col("trip_id")))
+        val (remap, keep) = canonicalIds(sig, "trip_id", TripSignature :+ "untimed")
         val f = feed.updated("trips", trips.join(keep, Seq("trip_id"), "left_semi"))
           .updated("stop_times", st.join(keep, Seq("trip_id"), "left_semi"))
         feed.get("frequencies") match {
@@ -419,10 +414,14 @@ object Clean {
     feed.updated("calendar", newCalendar).updated("calendar_dates", newCalDates)
   }
 
-  /** One trip as C9 sees it: its trip pattern (route, service, `rsig`)
-    * and its first departure `t0`. */
+  /** One stop in `rsig`: arrival and departure in seconds after `t0`. */
+  private[gtfs] final case class RelStop(stop_id: String, arr_s: Option[Long],
+      dep_s: Option[Long])
+
+  /** One trip as C9 sees it: its trip pattern (route, service and
+    * `rsig`, compared as values) and its first departure `t0`. */
   private[gtfs] final case class PatternTrip(trip_id: String, route_id: String,
-      service_id: String, rsig: String, t0: Option[Long])
+      service_id: String, rsig: Seq[RelStop], t0: Option[Long])
 
   /** C9's folds over one trip pattern's trips in (t0, trip_id) order,
     * nulls first: (trip_id, keep_trip, t0, headway_secs) for every trip
@@ -457,7 +456,7 @@ object Clean {
   // C9 --minimize-stoptimes (import.sh:77-79): trips identical up to a
   // time shift that repeat at constant headway fold into
   // frequencies.txt (exact_times=1). One sorted pass per trip pattern
-  // (route, service, relative-stop-sequence signature) decides the folds.
+  // (route, service, relative stop times `rsig`) decides the folds.
   def minimizeStopTimes(feed: Feed): Feed =
     (feed.get("trips"), feed.get("stop_times")) match {
       case (Some(trips), Some(st)) =>

@@ -60,6 +60,7 @@ class CleanPropertySpec extends SparkSpec {
 
   test("C9 property: folded frequencies re-expand to the original departures") {
     val rnd = new scala.util.Random(13)
+    val stopRnd = new scala.util.Random(19)
     (1 to 12).foreach { case_i =>
       // one route/service; a headway run of m trips plus noise trips
       val m = 3 + rnd.nextInt(4)
@@ -78,9 +79,12 @@ class CleanPropertySpec extends SparkSpec {
       val allT0s = (runT0s ++ run2T0s ++ noiseT0s).distinct
       val trips = allT0s.zipWithIndex.map { case (_, i) => (f"t$i%02d", "r1", "svc1") }
         .toDF("trip_id", "route_id", "service_id")
+      // the second stop is sB, or sB:120 with no arrival_time: rendered as
+      // stop_id:arr:dep with NULLs skipped, both would read sB:120:120
+      val second = allT0s.map(_ => if (stopRnd.nextBoolean()) "sB" else "sB:120")
       val st = allT0s.zipWithIndex.flatMap { case (t0, i) =>
         Seq((f"t$i%02d", fmt(t0), fmt(t0), "sA", 1),
-          (f"t$i%02d", fmt(t0 + 120), fmt(t0 + 120), "sB", 2))
+          (f"t$i%02d", if (second(i) == "sB") fmt(t0 + 120) else null, fmt(t0 + 120), second(i), 2))
       }.toDF("trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence")
       val feed: Clean.Feed = Map("trips" -> trips, "stop_times" -> st)
 
@@ -107,6 +111,21 @@ class CleanPropertySpec extends SparkSpec {
         .map(_.select("trip_id").as[String].collect().toSet).getOrElse(Set.empty)
       assert(freqTrips.subsetOf(tripIds),
         s"case $case_i: dangling frequencies trips ${freqTrips -- tripIds}")
+      // every re-expanded departure runs its own trip's stops
+      val stopsOf = folded("stop_times").groupBy("trip_id")
+        .agg(sort_array(collect_list(struct(col("stop_sequence"), col("stop_id")))).as("s"))
+        .select(col("trip_id"), col("s.stop_id")).as[(String, Seq[String])].collect().toMap
+      val scheduled = folded("stop_times").where(col("stop_sequence") === 1)
+        .select(col("trip_id"), GtfsTime.toSeconds(col("departure_time")).cast("int"))
+        .as[(String, Int)].collect().map { case (t, d) => d -> stopsOf(t) }
+      val replicas = folded.get("frequencies").toSeq.flatMap(_
+        .select(col("trip_id"), GtfsTime.toSeconds(col("start_time")).cast("int"),
+          GtfsTime.toSeconds(col("end_time")).cast("int"), col("headway_secs"))
+        .as[(String, Int, Int, Int)].collect().toSeq)
+        .flatMap { case (t, s0, s1, hw) => (s0 until s1 by hw).map(_ -> stopsOf(t)) }
+      val want = allT0s.zip(second).map { case (t0, s) => t0 -> Seq("sA", s) }.toSet
+      assert((scheduled ++ replicas).toSet == want,
+        s"case $case_i: departures moved to another trip's stops (second stops $second)")
     }
   }
 

@@ -139,6 +139,28 @@ class CleanSpec extends SparkSpec {
 
   private val weekdays = Seq(1, 1, 1, 1, 1, 0, 0)
 
+  test("C8 keeps a LONG service_id's type and its expanded date set") {
+    import spark.implicits._
+    // service 1 runs Mon-Fri over four weeks (a calendar row), service 2
+    // every 8 days (calendar_dates)
+    val d0 = java.time.LocalDate.of(2024, 1, 1)
+    val days = (0 until 26).map(d0.plusDays(_)).filter(_.getDayOfWeek.getValue <= 5)
+      .map(1L -> _) ++ Seq(0, 8, 16).map(d => 2L -> d0.plusDays(d))
+    val fmt = java.time.format.DateTimeFormatter.BASIC_ISO_DATE
+    val cd = days.map { case (svc, d) => (svc, d.format(fmt), 1) }
+      .toDF("service_id", "date", "exception_type")
+    val feed: Clean.Feed = Map("calendar_dates" -> cd)
+    val f = Clean.minimizeServices(feed)
+    for (n <- Seq("calendar", "calendar_dates"))
+      assert(f(n).schema("service_id").dataType == org.apache.spark.sql.types.LongType, n)
+    assert(f("calendar").select("service_id").as[Long].collect().toSeq == Seq(1L))
+    assert(f("calendar_dates").select("service_id").as[Long].collect().toSet == Set(2L))
+    def expansion(fd: Clean.Feed) = Views.serviceDays(fd).select("service_id", "svc_date")
+      .as[(Long, java.sql.Date)].collect().map { case (svc, d) => svc -> d.toLocalDate }.toSet
+    assert(expansion(f) == days.toSet)
+    assert(expansion(feed) == days.toSet)
+  }
+
   test("C8 encodes Mon-Fri over four weeks without its first-day holiday as one calendar row") {
     // 2024-01-01 is a Monday; removing it starts the span on the Tuesday
     assert(c8(Some((weekdays, "20240101", "20240126")), Seq("20240101" -> 2)) ==
@@ -239,6 +261,56 @@ class CleanSpec extends SparkSpec {
         (t, "08:00:00", "08:00:00", "s1", 1), (t, "08:10:00", "08:10:00", "s2", 2)))
         .toDF("trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence"))
     assert(ids(Clean.removeRedundantTrips(feed)("trips"), "trip_id") == Set("t1", "t2"))
+  }
+
+  /** A one-route, one-service feed from stop_times rows (trip, stop,
+    * stop_sequence, arrival_time, departure_time; None: an empty time). */
+  private def tripsFeed(st: Seq[(String, String, Int, Option[String], Option[String])])
+      : Clean.Feed = {
+    import spark.implicits._
+    Map("trips" -> st.map(_._1).distinct.map(t => (t, "r1", "svc1"))
+        .toDF("trip_id", "route_id", "service_id"),
+      "stop_times" -> st
+        .map { case (t, stop, seq, arr, dep) => (t, arr.orNull, dep.orNull, stop, seq) }
+        .toDF("trip_id", "arrival_time", "departure_time", "stop_id", "stop_sequence"))
+  }
+
+  /** Trip `t` at `h`:`m`: stop s1 at t0, then `stop` at t0 + 60 s, or
+    * with no arrival_time when `noArrival`, departing at t0 + 120 s. */
+  private def twoStops(t: String, h: Int, m: Int, stop: String, noArrival: Boolean = false) = {
+    def fmt(sec: Int) = f"${sec / 3600}%02d:${sec % 3600 / 60}%02d:${sec % 60}%02d"
+    val t0 = h * 3600 + m * 60
+    Seq((t, "s1", 1, Some(fmt(t0)), Some(fmt(t0))),
+      (t, stop, 2, if (noArrival) None else Some(fmt(t0 + 60)), Some(fmt(t0 + 120))))
+  }
+
+  private def stopTimes(f: Clean.Feed): Seq[(String, String)] = {
+    import spark.implicits._
+    f("stop_times").select("trip_id", "stop_id").as[(String, String)].collect().sorted.toSeq
+  }
+
+  test("C16 keeps a trip at 'a:60' with no arrival_time apart from one at 'a' at +60 s") {
+    // rendered as stop_id:arr:dep with NULLs skipped, both second stops read a:60:120
+    val f = Clean.removeRedundantTrips(tripsFeed(
+      twoStops("t1", 8, 0, "a:60", noArrival = true) ++ twoStops("t2", 8, 0, "a")))
+    assert(ids(f("trips"), "trip_id") == Set("t1", "t2"))
+    assert(stopTimes(f) == Seq(("t1", "a:60"), ("t1", "s1"), ("t2", "a"), ("t2", "s1")))
+  }
+
+  test("C16 keeps trips with no departure time, whatever their arrivals") {
+    val f = Clean.removeRedundantTrips(tripsFeed(Seq(
+      ("n1", "s1", 1, Some("08:00:00"), None), ("n1", "s2", 2, Some("08:10:00"), None),
+      ("n2", "s1", 1, Some("09:00:00"), None), ("n2", "s2", 2, Some("09:10:00"), None))))
+    assert(ids(f("trips"), "trip_id") == Set("n1", "n2"))
+    assert(stopTimes(f) == Seq(("n1", "s1"), ("n1", "s2"), ("n2", "s1"), ("n2", "s2")))
+  }
+
+  test("C9 does not fold a trip at 'a:60' with no arrival_time with trips at 'a' at +60 s") {
+    import spark.implicits._
+    val f = Clean.minimizeStopTimes(tripsFeed(twoStops("u1", 8, 0, "a:60", noArrival = true) ++
+      twoStops("u2", 8, 10, "a") ++ twoStops("u3", 8, 20, "a")))
+    assert(f("trips").select("trip_id").as[String].collect().sorted.toSeq == Seq("u1", "u2", "u3"))
+    assert(f("frequencies").count() == 0)
   }
 
   test("cleaned feed writes back as GTFS CSV (tidied.gtfs parity) and re-reads") {

@@ -15,7 +15,10 @@
 #          (trip_id, stop_sequence) order, and the services keep C8's
 #          encoding: one calendar row per service, none with an empty
 #          mask, and calendar_dates rows that only add dates (type 1)
-#          off the mask or outside the calendar span
+#          off the mask or outside the calendar span; and, by value, that
+#          no two services share a date list in service_days (C13), no two
+#          shapes share an ordered point list (C14) and no two timed trips
+#          share route, service and ordered stop times (C16)
 #   run 2: the P5 digest short-circuit — "importSkipped": true, no new db
 # Both runs materialize the consumer views (GTFS_MATERIALIZE_VIEWS).
 # Fully offline (file:// URL; sbt resolves from the warm local cache).
@@ -71,7 +74,7 @@ except ImportError:
 db = sys.argv[1]
 con = duckdb.connect()
 for entity in ("stops", "routes", "trips", "stop_times", "calendar", "calendar_dates",
-               "frequencies"):
+               "frequencies", "shapes", "service_days"):
     con.sql(f"CREATE VIEW {entity} AS SELECT * FROM read_parquet('{db}/{entity}/*.parquet')")
 rows, ts_type = con.sql(
     f"SELECT count(*), any_value(typeof(t_departure)) "
@@ -107,6 +110,22 @@ checks = {
     "calendar row with an all-zero mask":
         f"SELECT count(*) FROM calendar c WHERE NOT list_contains({mask}, 1)",
     "repeated calendar.service_id": "SELECT count(*) - count(DISTINCT service_id) FROM calendar",
+    # the merges (C13, C14, C16) leave no two entities equal on the
+    # values they compare
+    "services with the same dates": """
+        SELECT count(*) - count(DISTINCT dates) FROM (
+          SELECT list(svc_date ORDER BY svc_date) AS dates FROM service_days GROUP BY service_id)""",
+    "shapes with the same points": """
+        SELECT count(*) - count(DISTINCT points) FROM (
+          SELECT list([shape_pt_lat, shape_pt_lon] ORDER BY shape_pt_sequence) AS points
+          FROM shapes GROUP BY shape_id)""",
+    "timed trips with the same route, service and stop times": """
+        SELECT count(*) - count(DISTINCT (route_id, service_id, stops)) FROM (
+          SELECT any_value(t.route_id) AS route_id, any_value(t.service_id) AS service_id,
+                 list((st.stop_id, st.arrival_time, st.departure_time)
+                      ORDER BY st.stop_sequence) AS stops
+          FROM trips t JOIN stop_times st USING (trip_id) GROUP BY trip_id
+          HAVING count(st.departure_time) > 0)""",
     # primary keys
     "repeated stop_id": "SELECT count(*) - count(DISTINCT stop_id) FROM stops",
     "repeated trip_id": "SELECT count(*) - count(DISTINCT trip_id) FROM trips",

@@ -7,7 +7,8 @@ import graft.ops.JsonOut.q
   * line. Fixes from round-1 VERDICT:
   *   - results are written to the `noop` sink, not `.count()`ed, so
   *     Catalyst cannot prune away the projected work being measured;
-  *   - an untimed warmup query absorbs first-query session/codegen cost;
+  *   - an untimed warmup pass of the suite absorbs first-query
+  *     session/codegen cost;
   *   - failures surface as `null` per-query values plus a "failures"
   *     list instead of being swallowed as fast successes (r8 ADVICE:
   *     negative sentinels corrupted naive sums).
@@ -90,7 +91,9 @@ object Bench {
       if (loadavg().split(" ")(2).toDouble >= 1.0) "contended" else "idle"
     } catch { case _: Throwable => "unknown" }
 
-    // Untimed warmup of the shared codegen shapes (see graft.Warmup).
+    // Untimed warmup: one pass of the whole suite over the smoke tables,
+    // in this session, so first runs do not pay first compiles (see
+    // graft.Warmup).
     Warmup.run(spark, sfDir)
 
     val loadStart = loadavg()

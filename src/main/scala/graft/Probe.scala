@@ -38,8 +38,10 @@ object Probe {
     val parts = spark.conf.get("spark.sql.shuffle.partitions")
     println(s"[probe] sfDir=$sfDir cpus=${SparkEntry.cpus} shuffle.partitions=$parts" +
       (if (widthOverride.isDefined) " (env override)" else " (derived)"))
-    // Same untimed warmup as Bench, so probe numbers are comparable to
-    // bench rows (first-iteration cost = plan + any shape NOT warmed).
+    // Same untimed warmup as Bench (every query once over the smoke
+    // tables), so probe numbers are comparable to bench rows: the first
+    // iteration's extra cost is planning plus whatever the smoke-scale
+    // plans did not compile.
     Warmup.run(spark, sfDir)
     // Cumulative stop-the-world GC seconds across all collectors — the
     // per-iteration DELTA separates "the iteration was slow because the

@@ -36,8 +36,11 @@ object SparkEntry {
     * (nation, region — fixed cardinality at any SF) are broadcast;
     * customer scales with SF, so its join is left to AQE.
     */
-  def entry(spark: SparkSession): DataFrame =
-    q.Views.v2Entry(spark, "/root/testdata/sf0.001")
+  def entry(spark: SparkSession): DataFrame = q.Views.v2Entry(spark, SmokeDir)
+
+  /** The smoke tables: the flagship query's input and the data
+    * [[Warmup]] runs the suite over. */
+  val SmokeDir = "/root/testdata/sf0.001"
 
   /** Cores the suite session runs on: `SPARK_GRAFT_CPUS`, else every
     * processor the JVM sees. */
@@ -53,11 +56,13 @@ object SparkEntry {
     * 57.4→90.5→127.8 s; at 2048 a 5-pass run read
     * 54.7/55.6/79.3/68.7/50.4 s, pass 5 the fastest, the residual spread
     * uniform across queries (host noise). First-run totals dropped too
-    * (97.1→88.5 s): Warmup's precompiled shapes survive to the
-    * late-alphabet queries instead of being evicted mid-pass. 2048
-    * entries ≈ the suite's working set at ~50 KB/entry, and the same
-    * knob a long-lived SQL service running a repeated query mix raises
-    * for the same reason. */
+    * (97.1→88.5 s, under the hand-written warmup of the time): warmed
+    * classes survive to the late-alphabet queries instead of being
+    * evicted mid-pass. [[Warmup]] now compiles every query's classes in
+    * one untimed suite pass, which pays off only if the cache holds the
+    * whole suite. 2048 entries ≈ the suite's working set at ~50 KB/entry,
+    * and the same knob a long-lived SQL service running a repeated query
+    * mix raises for the same reason. */
   private[graft] val CodegenCacheEntries = 2048
 
   /** The one session builder of the suite mains (Bench, Verify, Probe,

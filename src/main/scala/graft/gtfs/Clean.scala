@@ -30,9 +30,9 @@ import graft.ops.Checkpoints.PinSyntax
   * folds and the trips they drop, C10's surviving trips and stop_times.
   * C8's per-service encoding is persisted instead, with a blocking
   * unpersist deferred to [[graft.ops.Releases]]: a pin is freed only
-  * when Spark's ContextCleaner collects it, while Warmup (which runs C8
-  * and must leave no cached blocks behind) and the import free C8's at
-  * their drain.
+  * when Spark's ContextCleaner collects it, while Warmup (whose
+  * `c8_minimize_services` query runs C8, and which must leave no cached
+  * blocks behind) and the import free C8's at their drain.
   */
 object Clean {
 

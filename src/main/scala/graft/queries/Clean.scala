@@ -344,7 +344,42 @@ object Clean {
       val cal = Tables.orders(s, d).where(col("o_orderkey") % 20 < 4)
         .select(col("o_orderkey").as("service_id"),
           col("o_orderdate").cast("date").as("sd"))
-      c8Summary(cal)
+      val variant = col("service_id") % 20
+      val off = datediff(col("dt"), col("sd"))
+      val dow = expr("weekday(dt)")
+      val days = cal
+        .select(col("service_id"), col("sd"),
+          explode(expr("sequence(sd, date_add(sd, 27), interval 1 day)")).as("dt"))
+        .where(
+          when(variant === 0, dow < 5)
+            .when(variant === 1, dow.isin(0, 2, 4))
+            .when(variant === 2, dow < 5 && off % 9 =!= 0)
+            .otherwise(off % 3 === 0))
+      // the synthesized calendar_dates keeps its DATE type: serviceDays'
+      // typed-date fast path (Views.asGtfsDate) skips the render+reparse
+      // round-trip the yyyyMMdd string form paid on every expanded day
+      val cd = days.select(col("service_id"), col("dt").as("date"),
+        lit(1).as("exception_type"))
+      val minimized = graft.gtfs.Clean.minimizeServices(Map("calendar_dates" -> cd))
+      val dowNames = Seq("monday", "tuesday", "wednesday", "thursday",
+        "friday", "saturday", "sunday")
+      val calOut = minimized("calendar").select(col("service_id"),
+        concat(dowNames.map(c => col(c).cast("string")): _*).as("mask"),
+        col("start_date"), col("end_date"))
+      val exCount = minimized("calendar_dates")
+        .groupBy("service_id").agg(count(lit(1)).as("n_exceptions"))
+      // every service appears in calendar OR retains exception dates
+      // (a service not worth a weekly mask keeps ALL its dates in
+      // calendar_dates), so the full outer join enumerates exactly the
+      // service set — re-deriving it from the source (a third run of
+      // the scan+explode pipeline) was the query's top remaining cost
+      calOut.join(exCount, Seq("service_id"), "full_outer")
+        .select(col("service_id"),
+          when(col("mask").isNotNull, 1L).otherwise(0L).as("in_calendar"),
+          coalesce(col("mask"), lit("-")).as("mask"),
+          coalesce(col("start_date"), lit("-")).as("start_date"),
+          coalesce(col("end_date"), lit("-")).as("end_date"),
+          coalesce(col("n_exceptions"), lit(0L)).as("n_exceptions"))
     },
 
     // C13 --remove-red-services: services with identical *date sets*
@@ -499,53 +534,4 @@ object Clean {
         .agg(min("l_orderkey").as("canonical"), count(lit(1)).as("n_trips"))
     },
   )
-
-  /** The c8 pipeline from a `(service_id, sd)` frame onward: synthesize
-    * four per-service date patterns over a 28-day span, run the REAL
-    * [[graft.gtfs.Clean.minimizeServices]], summarize the chosen
-    * encoding. Factored out of the QueryDef so Warmup can compile the
-    * query's EXACT plan shapes (28-day sequence explode, variant
-    * filter, mask aggregation, full_outer summary join) on a toy 4-row
-    * input — round-6's warmup covered minimizeServices alone and the
-    * bench row still carried ~3 s of first-compile cost from the
-    * shapes around it. */
-  private[graft] def c8Summary(cal: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val variant = col("service_id") % 20
-    val off = datediff(col("dt"), col("sd"))
-    val dow = expr("weekday(dt)")
-    val days = cal
-      .select(col("service_id"), col("sd"),
-        explode(expr("sequence(sd, date_add(sd, 27), interval 1 day)")).as("dt"))
-      .where(
-        when(variant === 0, dow < 5)
-          .when(variant === 1, dow.isin(0, 2, 4))
-          .when(variant === 2, dow < 5 && off % 9 =!= 0)
-          .otherwise(off % 3 === 0))
-    // the synthesized calendar_dates keeps its DATE type: serviceDays'
-    // typed-date fast path (Views.asGtfsDate) skips the render+reparse
-    // round-trip the yyyyMMdd string form paid on every expanded day
-    val cd = days.select(col("service_id"), col("dt").as("date"),
-      lit(1).as("exception_type"))
-    val minimized = graft.gtfs.Clean.minimizeServices(Map("calendar_dates" -> cd))
-    val dowNames = Seq("monday", "tuesday", "wednesday", "thursday",
-      "friday", "saturday", "sunday")
-    val calOut = minimized("calendar").select(col("service_id"),
-      concat(dowNames.map(c => col(c).cast("string")): _*).as("mask"),
-      col("start_date"), col("end_date"))
-    val exCount = minimized("calendar_dates")
-      .groupBy("service_id").agg(count(lit(1)).as("n_exceptions"))
-    // every service appears in calendar OR retains exception dates
-    // (a service not worth a weekly mask keeps ALL its dates in
-    // calendar_dates), so the full outer join enumerates exactly the
-    // service set — re-deriving it from the source (a third run of
-    // the scan+explode pipeline) was the query's top remaining cost
-    calOut.join(exCount, Seq("service_id"), "full_outer")
-      .select(col("service_id"),
-        when(col("mask").isNotNull, 1L).otherwise(0L).as("in_calendar"),
-        coalesce(col("mask"), lit("-")).as("mask"),
-        coalesce(col("start_date"), lit("-")).as("start_date"),
-        coalesce(col("end_date"), lit("-")).as("end_date"),
-        coalesce(col("n_exceptions"), lit(0L)).as("n_exceptions"))
-  }
 }

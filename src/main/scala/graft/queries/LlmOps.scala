@@ -2743,10 +2743,6 @@ object LlmOps {
     |"""
 
   /** The llm_lm_score pipeline from a `(doc_id, text)` frame onward.
-    * Factored out of the QueryDef so Warmup can compile the exact plan
-    * shapes (named_struct transform explode, cached-count broadcast
-    * join, integer-ppm div aggregation) on a toy frame — the c8Summary
-    * pattern.
     *
     * Model-join shape (r12 VERDICT #7, extended r13 VERDICT #1): BOTH
     * model relations — c2 (bigram counts) and c1 (context totals) —

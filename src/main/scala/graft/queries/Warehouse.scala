@@ -711,11 +711,7 @@ object Warehouse {
     * caller does not pay a separate distinct() exchange): symmetrize,
     * dedup, decorate with out-degree, persist the loop-invariant edge
     * set (released at the caller's drain), run 3 integer-ppm PageRank
-    * iterations — one join+agg shuffle each. Factored out of the
-    * QueryDef so Warmup can compile the loop's exact plan shapes on a
-    * toy graph (the c8Summary pattern: the per-iteration join+agg
-    * codegen otherwise lands in the first timed bench row — r9 bench
-    * medians: 6.4 s first vs 3.4 s steady).
+    * iterations — one join+agg shuffle each.
     *
     * Degree is groupBy(src)+count joined back, NOT
     * `count().over(Window.partitionBy(src))`: the window forces a

@@ -15,6 +15,20 @@ class WarmupSpec extends SparkSpec {
     }
     val err = buf.toString("UTF-8")
     assert(err.contains("[warmup] DEGRADED"), s"missing degraded notice: $err")
+    // one line that counts the failures and names the first: every
+    // table under the missing dir fails to resolve, while the queries
+    // still warm over the smoke tables
+    val lines = err.linesIterator.filter(_.contains("[warmup] DEGRADED")).toList
+    assert(lines.size == 1, s"expected one degraded line: $err")
+    val Line = """\[warmup\] DEGRADED: (\d+) of (\d+) queries failed \(first: ([^:]+): (.+)\)""".r
+    lines.head match {
+      case Line(n, total, first, msg) =>
+        assert(n.toInt == Tables.all.size, lines.head)
+        assert(total.toInt == Tables.all.size + SparkEntry.queries.size, lines.head)
+        assert(first == Tables.all.head, lines.head)
+        assert(msg.contains("/nonexistent/sf-dir"), lines.head)
+      case other => fail(s"malformed degraded line: $other")
+    }
   }
 
   test("healthy warmup is silent and side-effect free") {
@@ -24,9 +38,10 @@ class WarmupSpec extends SparkSpec {
       Warmup.run(spark, "/root/testdata/sf0.001")
     }
     assert(!buf.toString("UTF-8").contains("DEGRADED"))
-    // Drain-time release handles are blocking, so warmup's own blocks
-    // (IVF build, fixpoint final snapshot, c8 enc) are gone when run()
-    // returns. The fixpoint's MID-loop releases of superseded snapshots
+    // Warmup runs every suite query and drains after each one, and
+    // drain-time release handles are blocking, so the queries' own
+    // blocks (IVF index, fixpoint final snapshot, c8 encoding, PageRank
+    // edges, LM model) are gone when run() returns. The fixpoint's MID-loop releases of superseded snapshots
     // are intentionally non-blocking (no barrier inside the timed loop),
     // so those removals may still be in flight — allow them a bounded
     // grace period instead of asserting instantaneous cleanup.

@@ -127,6 +127,55 @@ class ImportPipelineSpec extends SparkSpec {
     assert(ranged.exceptAll(plain).isEmpty && plain.exceptAll(ranged).isEmpty)
   }
 
+  test("a 25:30:00 departure on the spring-forward day is anchored at noon minus 12h through the whole import") {
+    // Europe/Berlin springs forward at 02:00 on 2024-03-31. GTFS times
+    // count from noon minus 12h of the service day (22:00Z on 03-30),
+    // not from local midnight (23:00Z), so 25:30:00 is 23:30Z on 03-31,
+    // which is 01:30 CEST on 2024-04-01.
+    val root = Files.createTempDirectory("store-dst")
+    val feed = Files.createTempDirectory("fdst")
+    Map(
+      "agency.txt" ->
+        """agency_id,agency_name,agency_url,agency_timezone
+          |a1,Metro,https://metro.example,Europe/Berlin
+          |""".stripMargin,
+      "stops.txt" ->
+        """stop_id,stop_name,stop_lat,stop_lon
+          |s1,Nord,52.50,13.30
+          |s2,Sued,52.52,13.50
+          |""".stripMargin,
+      "routes.txt" ->
+        """route_id,agency_id,route_short_name,route_type
+          |r1,a1,N1,3
+          |""".stripMargin,
+      "trips.txt" ->
+        """trip_id,route_id,service_id
+          |t1,r1,svc1
+          |""".stripMargin,
+      "stop_times.txt" ->
+        """trip_id,arrival_time,departure_time,stop_id,stop_sequence
+          |t1,25:30:00,25:30:00,s1,1
+          |t1,25:45:00,25:45:00,s2,2
+          |""".stripMargin,
+      "calendar_dates.txt" ->
+        """service_id,date,exception_type
+          |svc1,20240331,1
+          |""".stripMargin,
+    ).foreach { case (name, text) => Files.writeString(feed.resolve(name), text) }
+
+    val r = Import.importGtfsAtomically(spark,
+      mkCfg(root, feed, "dst", clean = true).copy(materializeViews = true))
+    val db = MetaStore(root.toString).databasePath(r.newImport.get.dbName)
+    val rows = Views.arrivalsInRange(spark,
+        db.resolve("arrivals_departures").toString, "2024-03-30", "2024-04-01")
+      .where(col("trip_id") === "t1" && col("stop_sequence") === 1)
+      .select("svc_date", "t_departure").collect()
+    assert(rows.length == 1, rows.mkString(", "))
+    assert(rows(0).getDate(0).toLocalDate == java.time.LocalDate.of(2024, 3, 31))
+    assert(rows(0).getTimestamp(1).toInstant ==
+      java.time.Instant.parse("2024-03-31T23:30:00Z"))
+  }
+
   /** `body`'s result and the number of Spark jobs it started. Its jobs
     * carry a local property that the listener matches; a sentinel job
     * run after `body` is delivered after all of them, so the count is

@@ -1,8 +1,8 @@
 #!/usr/bin/env bash
 # The round's single test entry point (r16 VERDICT #6): the scalatest
 # suite, the benchmark's compile, its answer key, the DuckDB oracle over
-# the query suite and the end-to-end importer smoke in one command that
-# fails red on any of them.
+# the query suite, a Bench smoke and the end-to-end importer smoke in
+# one command that fails red on any of them.
 # tools/smoke_importer.sh runs its own `sbt -batch package` — sequencing
 # it AFTER the test run (instead of shelling it from inside a suite)
 # avoids nested sbt servers fighting over the project lock, and keeps
@@ -69,6 +69,30 @@ if ! grep -qE '^[1-9][0-9]* pass / 0 fail' <<<"$summary"; then
   exit 1
 fi
 echo "[ci] oracle ok: $summary"
+
+# The bench smoke: Bench (warmup included) over the smoke tables, one
+# whole-suite pass, so a query or warmup change that breaks only under
+# Bench fails here. sbt logs the forked run's stdout as [info] lines and
+# its stderr as [error] lines, so Bench's last stdout line is the log's
+# last [info] line. Red unless that line parses as JSON with n_failed 0
+# and the warmup did not report itself degraded.
+echo "[ci] bench smoke"
+bench_dir="$(mktemp -d "${TMPDIR:-/tmp}/graft-bench.XXXXXX")"
+trap 'rm -rf "$oracle_out" "$bench_dir"' EXIT
+SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 SPARK_GRAFT_BENCH_PASSES=1 \
+  SPARK_GRAFT_BENCH_OUT="$bench_dir/bench_out.json" \
+  sbt --batch -Dsbt.log.noformat=true "runMain graft.Bench" >"$bench_dir/bench.log" 2>&1
+bench_line="$(sed -n 's/^\[info\] //p' "$bench_dir/bench.log" | tail -n 1)"
+if ! python3 -c 'import json, sys; r = json.loads(sys.argv[1]); sys.exit(r["n_failed"] != 0)' "$bench_line" 2>/dev/null; then
+  echo "[ci] FAIL: bench smoke: ${bench_line:0:300}" >&2
+  exit 1
+fi
+if grep -q '\[warmup\] DEGRADED' "$bench_dir/bench.log"; then
+  grep '\[warmup\] DEGRADED' "$bench_dir/bench.log" >&2
+  echo "[ci] FAIL: bench smoke: degraded warmup" >&2
+  exit 1
+fi
+echo "[ci] bench smoke ok: ${bench_line:0:120}"
 
 echo "[ci] importer smoke"
 tools/smoke_importer.sh
